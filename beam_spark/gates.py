@@ -144,26 +144,14 @@ def _suite_select(tag, k_sql, v1_sql, v2_sql) -> str:
 
 def _tpch_suite_fn(mapping):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # members are pure LAZY plan constructions (no eager jobs), so
-        # building them on a thread pool overlaps the per-member
-        # py4j/Catalyst analysis cost (measured: the join suite's
-        # serial build was 4.5s of its 7.4s total at sf0.1 — the
-        # stats/analytics-gate posture, and the opposite regime from
-        # the ANN gate's eager-member negative result). The output is
-        # the identical frames in the identical mapping order.
-        def _build(entry):
-            tag, comp, k_sql, v1_sql, v2_sql = entry
-            df = _component(comp)(spark, sf_dir)
-            return df.selectExpr(
+        def _member(tag, comp, k_sql, v1_sql, v2_sql):
+            return lambda: _component(comp)(spark, sf_dir).selectExpr(
                 f"'{tag}' AS q", f"{k_sql} AS k",
                 f"CAST({v1_sql} AS DOUBLE) AS v1",
                 f"CAST({v2_sql} AS DOUBLE) AS v2" if v2_sql
                 else f"{_ZERO} AS v2")
 
-        from concurrent.futures import ThreadPoolExecutor
-        with ThreadPoolExecutor(min(8, len(mapping))) as _ex:
-            parts = list(_ex.map(_build, mapping))
-        return _union(parts)
+        return _union(Q.build_members(_member(*e) for e in mapping))
     return fn
 
 
@@ -308,8 +296,7 @@ def q_exact_percentiles(spark, sf_dir):
     eager trainers (GBM, binseg — per-round driver jobs at
     construction) don't stack onto the stats gate's own eager
     logistic fit: one eager-training family per gate keeps every
-    gate under the per-gate time budget. GBM and binseg build on a
-    2-thread pool (their training jobs overlap)."""
+    gate under the per-gate time budget."""
     def _pct():
         df = _component("q_exact_percentiles_quantity")(spark, sf_dir)
         return (df.select("l_returnflag",
@@ -375,17 +362,7 @@ def q_exact_percentiles(spark, sf_dir):
             "CAST(user_id AS STRING) || ':' || CAST(h AS STRING) AS k",
             "forecast AS v1", "abs_err AS v2", "mase AS v3")
 
-    # the LAZY members (pct, kalman, ar, backtest — window/agg plan
-    # constructions, no jobs) build on the same pool as the two eager
-    # trainers so their py4j/Catalyst analysis overlaps the training
-    # jobs instead of running serially after them (gate build was
-    # 6.0s of its 7.9s total at sf0.1 before this)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(6) as _ex:
-        futs = [_ex.submit(t)
-                for t in (_pct, _gbm, _binseg, _kalman, _ar, _bt)]
-        pct, gbm, binseg, kalman, ar, bt = [f.result() for f in futs]
-    return _union([pct, gbm, binseg, kalman, ar, bt])
+    return _union(Q.build_members([_pct, _gbm, _binseg, _kalman, _ar, _bt]))
 
 
 _EXACT_PCT_SQL = "\nUNION ALL\n".join(
@@ -669,10 +646,8 @@ def q_stats_moments(spark, sf_dir):
     the full Jensen-Shannon drift report. Forecast doubles ride
     UNROUNDED — both engines replay the same IEEE sequence.
 
-    The ~22 member frames are INDEPENDENT one-pass aggregation plans;
-    building them serially costs ~8s of driver-side Catalyst/py4j
-    time at sf0.1, so they are built on a thread pool (the analytics
-    gate's posture, measured 14->4.6s there) — the union output is
+    The member frames are INDEPENDENT one-pass aggregation plans,
+    built concurrently by ``Q.build_members`` — the union output is
     the identical frames in the identical order either way."""
     from beam_spark.operators.quality import DistributionDrift
     from beam_spark.operators.stats import CrostonForecast, ThetaForecast
@@ -753,7 +728,7 @@ def q_stats_moments(spark, sf_dir):
         # the three coldep projections read the SAME component frame
         # (a one-row dependence report whose ~2s MI/entropy pipeline
         # was otherwise planned AND executed three times in the
-        # union); one eager checkpoint on the pool, three trivial
+        # union); one eager checkpoint in this member, three trivial
         # projections — identical rows in the identical union slots
         base = _component("q_column_dependence_docs")(
             spark, sf_dir).localCheckpoint(eager=True)
@@ -772,17 +747,10 @@ def q_stats_moments(spark, sf_dir):
 
     # welch/anova/ols/covar all scan lineitem: ONE shared checkpointed
     # moment pass instead of four independent scans — see
-    # _li_moment_members. The eager checkpoint job runs on its own
-    # thread so it overlaps the member pool below.
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-    _li4_ex = _TPE(1)
-    _li4_fut = _li4_ex.submit(_li_moment_members, spark, sf_dir)
-    _li4_ex.shutdown(wait=False)
-
+    # _li_moment_members. That pass builds as one more member; its
+    # entries below are (member, exprs) projections of its result.
     def _li_tagged(member, *exprs):
-        def f():
-            return _li4_fut.result()[member].selectExpr(*exprs)
-        return f
+        return member, exprs
 
     thunks = [
         _tagged("q_variance_moments_per_type",
@@ -879,10 +847,12 @@ def q_stats_moments(spark, sf_dir):
                 "CAST(n AS DOUBLE) AS v4"),
         _seasonal,
     ]
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(16) as _ex:
-        futs = [_ex.submit(t) for t in thunks]
-        return _union([f.result() for f in futs])
+    li4, *built = Q.build_members(
+        [lambda: _li_moment_members(spark, sf_dir),
+         *(t for t in thunks if callable(t))])
+    built = iter(built)
+    return _union([next(built) if callable(t)
+                   else li4[t[0]].selectExpr(*t[1]) for t in thunks])
 
 
 _STATS_MOMENTS_SQL = "\nUNION ALL\n".join([
@@ -1036,18 +1006,15 @@ def q_analytics_suite(spark, sf_dir):
     stay component-oracled); PageRank folds only the top-20 nodes
     ordered by (pr DESC, node) — both engines agree on the round-9
     pr values node-by-node (the component oracle proves it), so the
-    selection is deterministic. Round 12 adds HITS (5th thread-pool
-    member, same link graph), Attribution, the l_orderkey%5
+    selection is deterministic. Round 12 adds HITS (same link
+    graph), Attribution, the l_orderkey%5
     FrequentItemsets slice and LogOddsTerms as tagged rows."""
     def _cmp(name):
         return lambda: _component(name)(spark, sf_dir)
 
-    # The four graph members are ITERATIVE (per-round eager
-    # localCheckpoint — the scale posture), so building them
-    # sequentially serializes ~9s of tiny per-round jobs at sf0.1;
-    # building them on threads overlaps the independent jobs on the
-    # same session (measured 2.2s for all four). Results are the
-    # identical checkpointed frames either way.
+    # the graph members are ITERATIVE (per-round eager localCheckpoint
+    # — the scale posture); all members build concurrently, so their
+    # round jobs and the report members' plan analysis overlap
     def _pagerank():
         return (_component("q_graph_pagerank_links")(spark, sf_dir)
                 .orderBy(F.desc("pr"), "node").limit(20))
@@ -1084,25 +1051,17 @@ def q_analytics_suite(spark, sf_dir):
         return (_PC(edges) | LinkPrediction(
             min_common=2, max_neighbor_degree=64)).df
 
-    # the LAZY report members (window/agg plan constructions, no
-    # jobs) build on the same pool as the six iterative graph members
-    # + the eager itemsets slice, so their py4j/Catalyst analysis
-    # overlaps the graph round jobs instead of running serially after
-    # the pool drains
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(8) as _ex:
-        futs = [_ex.submit(f) for f in (
-            _pagerank, _sssp, _tri, _kcore, _hits, _linkpred,
-            lambda: _itemsets_slice(spark, sf_dir),
-            _cmp("q_running_total_per_customer"),
-            _cmp("q_rank_orders_in_priority"),
-            _cmp("q_funnel_view_click_purchase"),
-            _cmp("q_cohort_retention_monthly"),
-            _cmp("q_event_transition_matrix"),
-            _cmp("q_attribution_last_touch"),
-            _cmp("q_text_log_odds_terms"))]
-        (prt, sssp, tri, kc, hits, lpred, itemsets, run, rnk, fun,
-         coh, trn, attrib, logodds) = [f.result() for f in futs]
+    (prt, sssp, tri, kc, hits, lpred, itemsets, run, rnk, fun,
+     coh, trn, attrib, logodds) = Q.build_members([
+        _pagerank, _sssp, _tri, _kcore, _hits, _linkpred,
+        lambda: _itemsets_slice(spark, sf_dir),
+        _cmp("q_running_total_per_customer"),
+        _cmp("q_rank_orders_in_priority"),
+        _cmp("q_funnel_view_click_purchase"),
+        _cmp("q_cohort_retention_monthly"),
+        _cmp("q_event_transition_matrix"),
+        _cmp("q_attribution_last_touch"),
+        _cmp("q_text_log_odds_terms")])
     return _union([
         run.selectExpr("'run' AS op", "o_orderkey AS k1",
                        "CAST(o_custkey AS STRING) AS k2",
@@ -1356,11 +1315,6 @@ def q_text_suite(spark, sf_dir):
     """Per-document text analysis: token counting, quality features,
     language id, content fingerprint + exact-dup group info — each from
     its own operator, joined on doc_id/md5."""
-    # every member is a pure LAZY plan construction over documents (no
-    # eager jobs), so the per-member py4j/Catalyst analysis cost is
-    # overlapped on a thread pool (measured: serial build was 4.0s of
-    # the gate's 7.0s at sf0.1) — the joined output is the identical
-    # frames either way
     from beam_spark.operators.text import Fingerprint
 
     def _fp():
@@ -1405,10 +1359,7 @@ def q_text_suite(spark, sf_dir):
         "split": lambda: _component("q_dedup_leakage_safe_split")(
             spark, sf_dir).select("doc_id", "split"),
     }
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(8) as _ex:
-        futs = {k: _ex.submit(t) for k, t in thunks.items()}
-        built = {k: f.result() for k, f in futs.items()}
+    built = dict(zip(thunks, Q.build_members(thunks.values())))
     a, b, c, fp = built["a"], built["b"], built["c"], built["fp"]
     groups, pii, gopher = built["groups"], built["pii"], built["gopher"]
     ppl, norm, ent = built["ppl"], built["norm"], built["ent"]
@@ -1497,12 +1448,8 @@ def q_dedup_pairs_suite(spark, sf_dir):
 
     r15 fold (VERDICT #2): LSH DBSCAN — the one family the driver's
     oracle never saw in r14. The gate instance runs the vec_id%10
-    embeddings slice with bands=4 (its ~4.3s standalone cost is mostly
-    driver-side plan analysis of the per-dimension fold expressions,
-    which OVERLAPS the other eager members' executor work on the
-    pool; the vec_id%8 bands=8 instance stays component-oracled). The
-    three ITERATIVE members (cc, dbscan, dbscan_lsh — eager per-round
-    checkpoints at construction) build on a 3-thread pool."""
+    embeddings slice with bands=4 (the vec_id%8 bands=8 instance
+    stays component-oracled)."""
     from beam_spark.operators.dedupe import (ContainmentPairs,
                                              MinHashLSH,
                                              NgramJaccardPairs)
@@ -1532,31 +1479,18 @@ def q_dedup_pairs_suite(spark, sf_dir):
                                     bands=4, rows_per_band=2,
                                     seed=7)).df
 
-    # the LAZY members (shingle/pair plan constructions, no jobs)
-    # build on the same pool as the three eager iterative members so
-    # their py4j/Catalyst analysis overlaps the star-CC/DBSCAN round
-    # jobs instead of running serially after them. r14 fold:
-    # containment = asymmetric pairs on the same half-corpus slice
-    # (the full corpus stays component-oracled).
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(6) as _ex:
-        futs = [
-            _ex.submit(_cc), _ex.submit(_dbscan), _ex.submit(_dbscan_lsh),
-            _ex.submit(lambda: (_PC(half) | NgramJaccardPairs(
-                threshold=0.6)).df),
-            _ex.submit(lambda: (_PC(half) | MinHashLSH(
-                bands=16, rows_per_band=8, threshold=0.6)).df),
-            _ex.submit(lambda: (_PC(half) | ContainmentPairs(
-                threshold=0.5)).df),
-            _ex.submit(lambda: _component("q_embedding_neardup_pairs")(
-                spark, sf_dir)),
-            _ex.submit(lambda: _component("q_dedup_exact_substr_spans")(
-                spark, sf_dir)),
-            _ex.submit(lambda: _component("q_dedup_sorted_neighborhood")(
-                spark, sf_dir)),
-        ]
-        (cc, dbscan, dbscan_lsh, ngram, minhash, containment, emb,
-         spans, snm) = [f.result() for f in futs]
+    # r14 fold: containment = asymmetric pairs on the same half-corpus
+    # slice (the full corpus stays component-oracled).
+    (cc, dbscan, dbscan_lsh, ngram, minhash, containment, emb,
+     spans, snm) = Q.build_members([
+        _cc, _dbscan, _dbscan_lsh,
+        lambda: (_PC(half) | NgramJaccardPairs(threshold=0.6)).df,
+        lambda: (_PC(half) | MinHashLSH(
+            bands=16, rows_per_band=8, threshold=0.6)).df,
+        lambda: (_PC(half) | ContainmentPairs(threshold=0.5)).df,
+        lambda: _component("q_embedding_neardup_pairs")(spark, sf_dir),
+        lambda: _component("q_dedup_exact_substr_spans")(spark, sf_dir),
+        lambda: _component("q_dedup_sorted_neighborhood")(spark, sf_dir)])
     return _union([
         ngram.selectExpr("'ngram' AS method", "i", "j", "jaccard AS sim"),
         minhash.selectExpr("'minhash_lsh' AS method", "i", "j", "jaccard AS sim"),
@@ -1696,28 +1630,16 @@ def q_ann_exhaustive_suite(spark, sf_dir):
     hq = half.filter("doc_id < 5").selectExpr(
         "doc_id AS query_id", "text")
 
-    # Build split (refines the r14 all-member negative result — an
-    # 8-way pool of ALL members was 34% slower because the EAGER
-    # members' many tiny training jobs queued behind each other on
-    # local FIFO): the eager members (k-means seeding/rounds, IVF
-    # training, LSH's input probe) still build SERIALLY in this
-    # thread, so their jobs never contend; the LAZY members (pure
-    # plan constructions, zero jobs — measured ~4s of serial
-    # py4j/Catalyst analysis) build on a pool that overlaps both each
-    # other and the eager jobs. Identical frames either way.
     def _bm25():
         return (PCollection(half) | Bm25TopK(hq, k=5, k1=1.5)).df
 
-    def _rrf(bm):
-        # bm = the pooled _bm25 member's frame, reused verbatim — the
-        # fused ranking is a pure function of the two rank frames, so
-        # sharing the construction changes nothing downstream
+    def _rrf():
         ann_leg = (PCollection(emb)
                    | BruteForceCosineTopK(
                        emb.filter("vec_id < 5 AND vec_id % 2 = 0"), k=5,
                        exclude_self=False)
                    ).df.selectExpr("query_id", "nbr_id AS doc_id", "rank")
-        return (PCollection(half) | RrfFuse(bm, ann_leg, k=5)).df
+        return (PCollection(half) | RrfFuse(_bm25(), ann_leg, k=5)).df
 
     def _bm25f():
         split = F.split(F.lower(F.trim("text")), r"\s+")
@@ -1731,42 +1653,26 @@ def q_ann_exhaustive_suite(spark, sf_dir):
             hq, {"title": (3.0, 0.5), "body": (1.0, 0.75)},
             k=5, k1=1.5)).df
 
+    def _lsh():
+        return (PCollection(emb)
+                | LshCosineTopK(queries_df, k=5, n_planes=4,
+                                probe_all=True)).df
+
+    def _ivf():
+        return (PCollection(emb)
+                | IvfCosineTopK(queries_df, k=5, n_lists=8, nprobe=8)).df
+
     def _cmp(name):
         return lambda: _component(name)(spark, sf_dir)
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(6) as _ex:
-        # rrf and knn are NOT in the lazy pool: both issue a driver
-        # job at construction (their BruteForceCosineTopK legs collect
-        # the query rows), and job-issuing members on pool threads
-        # contend with the eager trainers' jobs on local FIFO — the
-        # r14 all-member-pool pathology (ADVICE r15). They build
-        # serially with the other eager members below.
-        lazy = {
-            "bm25": _ex.submit(_bm25),
-            "bm25f": _ex.submit(_bm25f),
-            "bm25_and": _ex.submit(_cmp("q_retrieval_bm25_and")),
-            "bm25_ph": _ex.submit(_cmp("q_retrieval_bm25_phrase")),
-            "posph": _ex.submit(_cmp("q_retrieval_phrase_positional")),
-            "mmr": _ex.submit(_cmp("q_ann_mmr_rerank")),
-            "ql": _ex.submit(_cmp("q_retrieval_query_likelihood")),
-            "pl2": _ex.submit(_cmp("q_retrieval_pl2_topk")),
-        }
-        # eager members stay serial in THIS thread while the pool
-        # grinds the lazy constructions
-        lsh = (PCollection(emb)
-               | LshCosineTopK(queries_df, k=5, n_planes=4,
-                               probe_all=True)).df
-        ivf = (PCollection(emb)
-               | IvfCosineTopK(queries_df, k=5, n_lists=8, nprobe=8)).df
-        km = _component("q_kmeans_embeddings")(spark, sf_dir)
-        rrf = _rrf(lazy["bm25"].result())
-        knn = _cmp("q_ann_knn_classify")()
-        bm25, bm25f = lazy["bm25"].result(), lazy["bm25f"].result()
-        bm25_and, bm25_ph = (lazy["bm25_and"].result(),
-                             lazy["bm25_ph"].result())
-        posph, mmr = lazy["posph"].result(), lazy["mmr"].result()
-        ql, pl2 = lazy["ql"].result(), lazy["pl2"].result()
+    (lsh, ivf, bm25, rrf, bm25_and, bm25_ph, bm25f, posph, mmr, km, ql,
+     pl2, knn) = Q.build_members([
+        _lsh, _ivf, _bm25, _rrf,
+        _cmp("q_retrieval_bm25_and"), _cmp("q_retrieval_bm25_phrase"),
+        _bm25f, _cmp("q_retrieval_phrase_positional"),
+        _cmp("q_ann_mmr_rerank"), _cmp("q_kmeans_embeddings"),
+        _cmp("q_retrieval_query_likelihood"), _cmp("q_retrieval_pl2_topk"),
+        _cmp("q_ann_knn_classify")])
     return _union([
         lsh.selectExpr("'lsh' AS method", "query_id", "nbr_id", "rank", "cosine"),
         ivf.selectExpr("'ivf' AS method", "query_id", "nbr_id", "rank", "cosine"),
@@ -1925,9 +1831,7 @@ def q_anomaly_mltrain(spark, sf_dir):
     # quarter-sample — TRAINING replayed by the oracle). r15: the
     # per-GROUP (one forest per event_type) and EXTENDED/oblique
     # variants join as tagged rows; all three fits are EAGER
-    # (depth-round driver jobs at construction), so they build on a
-    # 3-thread pool — their small per-round jobs interleave, unlike
-    # the big-job trainers the one-eager-trainer rule is about.
+    # (depth-round driver jobs at construction).
     def _if_axis():
         return _component("q_ml_isolation_forest")(
             spark, sf_dir).selectExpr(
@@ -1949,17 +1853,8 @@ def q_anomaly_mltrain(spark, sf_dir):
     def _mlt():
         return _component("q_pipeline_ml_training")(spark, sf_dir)
 
-    # the composed NB->logistic->isotonic trainer joins the pool: its
-    # eager logistic fit is a handful of medium jobs that interleave
-    # with the iforests' depth-round jobs (measured: serial-after-pool
-    # left it on the critical path — build 6.1s of the gate's 8.5s)
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(4) as _ex:
-        fa, fg, fo, fm = (_ex.submit(_if_axis), _ex.submit(_if_grp),
-                          _ex.submit(_if_obl), _ex.submit(_mlt))
-        iforest, ifg, ifo, mlt = (fa.result(), fg.result(),
-                                  fo.result(), fm.result())
-    return _union([anomaly, robust, iforest, ifg, ifo, mlt])
+    return _union([anomaly, robust, *Q.build_members(
+        [_if_axis, _if_grp, _if_obl, _mlt])])
 
 
 _ANOMALY_MLTRAIN_SQL = f"""
@@ -2107,10 +2002,8 @@ def q_io_roundtrip(spark, sf_dir):
 
     schema = "n_nationkey long, n_name string, n_regionkey long"
 
-    # the five format round-trips are independent WRITE jobs to five
-    # distinct directories — overlap them on a pool (guide §2.6
-    # "overlap independent jobs"); the union order below is fixed by
-    # code, identical to the serial version
+    # the five format round-trips write five distinct directories, so
+    # they are independent members
     def _fmt_part(fmt):
         path = os.path.join(base, fmt)
         w = nation.write.mode("overwrite")
@@ -2155,13 +2048,9 @@ def q_io_roundtrip(spark, sf_dir):
         return back.selectExpr("'avro' AS fmt", "n_nationkey", "n_name",
                                "n_regionkey")
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(5) as _ex:
-        futs = [_ex.submit(_fmt_part, "csv"), _ex.submit(_fmt_part, "json"),
-                _ex.submit(_fmt_part, "orc"), _ex.submit(_tfrecord_part),
-                _ex.submit(_avro_part)]
-        parts = [f.result() for f in futs]
-    return _union(parts)
+    return _union(Q.build_members([
+        lambda: _fmt_part("csv"), lambda: _fmt_part("json"),
+        lambda: _fmt_part("orc"), _tfrecord_part, _avro_part]))
 
 
 _IO_ROUNDTRIP_SQL = """

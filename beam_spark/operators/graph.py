@@ -470,10 +470,11 @@ class KCore(PTransform):
         rounds = (self.fixed_rounds if self.fixed_rounds is not None
                   else self.max_rounds)
         prev_n = None
-        for i in range(rounds):
+        for _ in range(rounds):
             deg = degrees(edges)
-            # non-eager: materialized by the count below (convergence
-            # mode) or inside the edges checkpoint job (fixed mode)
+            # non-eager: the first job that reads it (the count below
+            # in convergence mode, else the edges checkpoint) stores
+            # its blocks, and both semi-joins then read those blocks
             survivors = (deg.where(F.col("degree") >= k)
                          .select("node")
                          .localCheckpoint(eager=False))
@@ -486,18 +487,12 @@ class KCore(PTransform):
                     break
             sa = survivors.select(F.col("node").alias("a"))
             sb = survivors.select(F.col("node").alias("b"))
-            # fixed mode: TWO peeling rounds per materialization job
-            # (guide §1.2) — odd rounds stay non-eager and are
-            # materialized inside the next round's eager checkpoint
-            # (the next round references this frame exactly once, in
-            # degrees()); identical arithmetic, half the driver jobs.
-            # Convergence mode keeps per-round eager checkpoints: its
-            # count action needs each round anyway.
-            eager = (self.fixed_rounds is None or i % 2 == 1
-                     or i == rounds - 1)
+            # every round's edges checkpoint is eager in both modes
+            # (PageRank's fixed-mode posture): the next round reads it
+            # twice, through degrees()' two unionAll branches
             edges = (und.join(sa, "a", "left_semi")
                      .join(sb, "b", "left_semi")
-                     .localCheckpoint(eager=eager))
+                     .localCheckpoint(eager=True))
         out = (degrees(edges).where(F.col("degree") >= k)
                .select("node", F.col("degree").cast("long")
                        .alias("degree")))

@@ -112,6 +112,20 @@ def fan_out(df, spark: SparkSession):
     return df
 
 
+def build_members(thunks):
+    """Build independent members of a composite query concurrently,
+    one thread per member, so their driver-side plan analysis and any
+    eager jobs they issue overlap. Returns the results in input order;
+    a member's exception is re-raised once every member has finished."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    thunks = list(thunks)
+    with ThreadPoolExecutor(max(len(thunks), 1)) as ex:
+        # submit, not map: map cancels still-queued members on an error
+        futures = [ex.submit(build) for build in thunks]
+        return [f.result() for f in futures]
+
+
 # --------------------------------------------------------------------------
 # q1 — TPC-H Q1 shape: scan -> filter -> project -> hash aggregate.
 # Exercises: ReadFromParquet, Filter (pushed to scan), CombinePerKey
@@ -10937,9 +10951,7 @@ def q_pipeline_ml_training(spark, sf_dir):
     # eager localCheckpoint each materializes the identical frame
     # once; every downstream aggregate is exact-integer/decimal.
     # The NB-routing chain and the logistic->metrics->isotonic chain
-    # are INDEPENDENT DAGs whose eager fit/checkpoint jobs previously
-    # serialized on one thread — they build on two threads (their
-    # jobs interleave; the realized frames are identical).
+    # are independent DAGs, built as two members.
     def _nb_branch():
         routed = (PCollection(test)
                   | NaiveBayesClassify(train, "lang", "doc_id")
@@ -10972,12 +10984,8 @@ def q_pipeline_ml_training(spark, sf_dir):
                | IsotonicCalibration("score", "yl")).df
         return weights, metrics, iso
 
-    from concurrent.futures import ThreadPoolExecutor
-    with ThreadPoolExecutor(2) as _ex:
-        _fnb = _ex.submit(_nb_branch)
-        _flog = _ex.submit(_logistic_branch)
-        routed, acc = _fnb.result()
-        weights, metrics, iso = _flog.result()
+    (routed, acc), (weights, metrics, iso) = build_members(
+        [_nb_branch, _logistic_branch])
 
     zero = "CAST(0 AS DOUBLE)"
     return (acc.selectExpr(

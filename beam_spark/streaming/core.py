@@ -568,8 +568,6 @@ class TestStream:
                 T.DoubleType: pa.float64(), T.FloatType: pa.float32(),
                 T.StringType: pa.string(), T.BooleanType: pa.bool_(),
                 T.DateType: pa.date32(),
-                # session tz is UTC (engine default): naive datetimes
-                # are UTC instants, exactly what createDataFrame did
                 T.TimestampType: pa.timestamp("us", tz="UTC"),
             }
         return cls._ARROW_TYPES.get(type(dt))
@@ -580,13 +578,20 @@ class TestStream:
         from pyspark.sql import types as T
 
         struct = T._parse_datatype_string(self.schema)
+        utc = datetime.timezone.utc
         coerced = []
         for row in rows:
             r = dict(row)
             for f in struct.fields:
                 v = r.get(f.name)
-                if isinstance(f.dataType, T.TimestampType) and isinstance(v, str):
-                    r[f.name] = datetime.datetime.fromisoformat(v)
+                if not isinstance(f.dataType, T.TimestampType):
+                    continue
+                if isinstance(v, str):
+                    v = r[f.name] = datetime.datetime.fromisoformat(v)
+                # naive datetimes are UTC instants on both write paths
+                # (createDataFrame would read them in the OS time zone)
+                if isinstance(v, datetime.datetime) and v.tzinfo is None:
+                    r[f.name] = v.replace(tzinfo=utc)
             coerced.append(r)
         # Write the scripted file DIRECTLY with pyarrow when every
         # field maps: the previous createDataFrame + coalesce(1) +
@@ -604,15 +609,8 @@ class TestStream:
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            utc = datetime.timezone.utc
-            cols = {}
-            for f in struct.fields:
-                vals = [r.get(f.name) for r in coerced]
-                if isinstance(f.dataType, T.TimestampType):
-                    vals = [v.replace(tzinfo=utc)
-                            if isinstance(v, datetime.datetime)
-                            and v.tzinfo is None else v for v in vals]
-                cols[f.name] = vals
+            cols = {f.name: [r.get(f.name) for r in coerced]
+                    for f in struct.fields}
             tbl = pa.Table.from_pydict(
                 cols, schema=pa.schema(
                     [pa.field(f.name, t)

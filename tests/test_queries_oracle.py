@@ -72,3 +72,40 @@ def test_gate_outputs_are_scalar_only(spark):
             assert not isinstance(
                 f.dataType, (T.ArrayType, T.MapType, T.StructType)), (
                 f"{name}.{f.name} is {f.dataType.simpleString()}")
+
+
+def test_build_members_order_and_errors():
+    """build_members runs every member on its own thread, returns the
+    results in input order, and re-raises a member's exception only
+    after the other members have finished."""
+    import threading
+    import time
+
+    from beam_spark.queries import build_members
+
+    # all five members must be running at once to pass the barrier;
+    # the later ones finish first, yet results keep input order
+    barrier = threading.Barrier(5, timeout=10)
+
+    def member(i):
+        def build():
+            barrier.wait()
+            time.sleep(0.05 * (4 - i))
+            return i
+        return build
+
+    assert build_members([member(i) for i in range(5)]) == [0, 1, 2, 3, 4]
+
+    finished = []
+
+    def slow():
+        time.sleep(0.2)
+        finished.append("slow")
+        return "slow"
+
+    def boom():
+        raise KeyError("bad member")
+
+    with pytest.raises(KeyError, match="bad member"):
+        build_members([boom, slow])
+    assert finished == ["slow"]

@@ -30,6 +30,43 @@ def test_streaming_windowed_agg_default_trigger(spark):
     assert ("a", "2024-01-01T00:00:00", 2, 3) in rows
 
 
+def test_teststream_naive_datetimes_are_utc_on_both_write_paths(spark):
+    """A naive datetime is the same UTC instant whether the scripted
+    file is written by pyarrow or, for a field pyarrow is not mapped
+    for (decimal here), by createDataFrame — also under a non-UTC
+    process time zone."""
+    import datetime
+    import os
+    import time
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    expected = int(datetime.datetime(
+        2024, 1, 1, 0, 0, 10, tzinfo=datetime.timezone.utc).timestamp())
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Kolkata"
+    time.tzset()
+    try:
+        seen = {}
+        for path, schema, v in (
+                ("arrow", "t timestamp, v long", 1),
+                ("fallback", "t timestamp, v decimal(10,2)", Decimal(1))):
+            ts = TestStream(spark, schema)
+            ts.add_elements([{"t": datetime.datetime(2024, 1, 1, 0, 0, 10),
+                              "v": v}, {"t": "2024-01-01 00:00:10", "v": v}])
+            seen[path] = sorted(
+                r[0] for r in spark.read.parquet(ts.dir)
+                .select(F.unix_seconds("t")).collect())
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert seen == {"arrow": [expected] * 2, "fallback": [expected] * 2}
+
+
 def test_streaming_dedup_within_watermark(spark):
     ts = TestStream(spark, "t timestamp, event_id long, v long")
     ts.add_elements([{"t": "2024-01-01 00:00:00", "event_id": 1, "v": 1},

@@ -4,6 +4,8 @@
 Usage: python tools/dump_plans.py <tag> <suffix> [name ...]
 e.g.   python tools/dump_plans.py r15 before            # all 50 gates
        python tools/dump_plans.py r15 after q_text_suite q_stats_moments_suite
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.01 TESTDATA tables),
+SPARK_GRAFT_CPUS (the engine's core count; default all cores)
 """
 
 from __future__ import annotations
@@ -17,12 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from beam_spark.session import get_spark
     from beam_spark import gates as g
 
-    spark = get_spark("beam_spark-plans", master="local[4]")
+    spark = get_spark("beam_spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "plans", tag)

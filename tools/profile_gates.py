@@ -5,10 +5,12 @@ For each gate: time the registry call (driver-side plan construction +
 eager member training) separately from the noop-sink execution. High
 build_s = Catalyst/py4j/eager-training bound (guide §7.3 driver work);
 high exec_s = executor bound. Median of N passes, untimed warmup pass
-first (same methodology as bench.py).
+first.
 
 Usage: python tools/profile_gates.py [gate ...]   (default: all)
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_PROFILE_RUNS
+Env: SPARK_GRAFT_SF_DIR (default: the sf0.01 TESTDATA tables),
+SPARK_GRAFT_CPUS (the engine's core count; default all cores),
+SPARK_GRAFT_PROFILE_RUNS (passes per gate; default 3)
 """
 
 from __future__ import annotations
@@ -22,14 +24,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     n_runs = int(os.environ.get("SPARK_GRAFT_PROFILE_RUNS", "3"))
 
     from beam_spark.session import get_spark
     from beam_spark import gates as g
 
-    spark = get_spark("beam_spark-profile", master=f"local[{cpus}]")
+    spark = get_spark("beam_spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
 
     registry = g.queries()
