@@ -7,7 +7,7 @@ import pytest
 
 from beam_spark import gates as g
 from beam_spark import queries as q
-from tests.oracle import compare_spark_duckdb
+from tests.oracle import oracle_sweep
 
 # components that are NOT themselves gates (suite members + extras)
 GATE_NAMES = set(g.queries())
@@ -21,27 +21,15 @@ def test_component_inventory_nonempty():
 
 @pytest.fixture(scope="module")
 def component_outcomes(spark, duck, sf_dir):
-    """Precompute every component-vs-oracle comparison on a thread
-    pool: Spark job submission is thread-safe and the ~250 serial
-    build+collect+DuckDB rounds were the suite's largest block
-    (VERDICT r15 #1 — the driver's pytest run cannot finish its time
-    window). Each thread compares ONE component with its own DuckDB
-    cursor (cursors share the in-memory catalog/views); the
-    per-component tests below re-raise the stored outcome, so
-    reporting is identical to the serial version."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def one(name):
-        try:
-            compare_spark_duckdb(q.queries()[name](spark, sf_dir),
-                                 duck.cursor(), q.oracle_sql()[name])
-            return None
-        except BaseException as e:  # stored, re-raised in the test
-            return e
-
-    with ThreadPoolExecutor(12) as ex:
-        futs = {n: ex.submit(one, n) for n in COMPONENT_NAMES}
-        return {n: f.result() for n, f in futs.items()}
+    """Precompute every component-vs-oracle comparison with
+    ``oracle_sweep`` (Spark on a thread pool, DuckDB on its own
+    thread): the ~250 serial build+collect+DuckDB rounds were the
+    suite's largest block. The per-component tests below re-raise
+    the stored outcome, so reporting is identical to the serial
+    version."""
+    return oracle_sweep(COMPONENT_NAMES,
+                        lambda n: q.queries()[n](spark, sf_dir),
+                        q.oracle_sql(), duck)
 
 
 @pytest.mark.parametrize("name", COMPONENT_NAMES)

@@ -48,7 +48,10 @@ def _run_example(name):
     return subprocess.run(
         [sys.executable, os.path.join(EXAMPLES_DIR, name), *argv],
         capture_output=True, text=True, timeout=420,
-        env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
+        # a 1g heap per example JVM: at the engine's 8g default eight
+        # concurrent examples held ~13 GB between them
+        env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR,
+             "SPARK_GRAFT_DRIVER_MEM": "1g"},
     )
 
 
@@ -62,7 +65,8 @@ def example_procs():
     example name; the per-example tests below assert exactly what
     the serial version asserted. A run's exception (such as
     TimeoutExpired) is stored and re-raised only in that example's
-    test."""
+    test. Four at a time: the host has four cores, and each example
+    JVM brings its own Python workers."""
     from concurrent.futures import ThreadPoolExecutor
 
     def run(name):
@@ -71,7 +75,7 @@ def example_procs():
         except Exception as e:  # stored, re-raised in the test
             return e
 
-    with ThreadPoolExecutor(8) as ex:
+    with ThreadPoolExecutor(4) as ex:
         futs = {n: ex.submit(run, n) for n in ALL_EXAMPLES}
         return {n: f.result() for n, f in futs.items()}
 
