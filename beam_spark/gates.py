@@ -1012,9 +1012,10 @@ def q_analytics_suite(spark, sf_dir):
     def _cmp(name):
         return lambda: _component(name)(spark, sf_dir)
 
-    # the graph members are ITERATIVE (per-round eager localCheckpoint
-    # — the scale posture); all members build concurrently, so their
-    # round jobs and the report members' plan analysis overlap
+    # the graph members are ITERATIVE (their rounds run at build
+    # time, through graph._fixed_point); all members build
+    # concurrently, so their round jobs and the report members' plan
+    # analysis overlap
     def _pagerank():
         return (_component("q_graph_pagerank_links")(spark, sf_dir)
                 .orderBy(F.desc("pr"), "node").limit(20))

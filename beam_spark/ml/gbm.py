@@ -138,11 +138,10 @@ class GradientBoostedStumps(PTransform):
         # column double frame in this JVM's block manager, and a frame
         # that doesn't fit dies as an opaque JVM OOM mid-round) and
         # the exact-decimal target sum (the base prediction). The
-        # per-feature distinct-count guard moved into round 1's
-        # histogram (its cells-per-feature count IS the distinct
-        # count) — the three countDistinct aggregates forced an
-        # Expand over the whole frame in this setup job for a number
-        # round 1 computes anyway.
+        # per-feature distinct-count guard rides round 1's histogram
+        # (its non-NULL cells per feature ARE the distinct counts),
+        # whose collect is capped so the guard fires before an
+        # un-quantized feature's histogram reaches the driver.
         row0 = df.agg(
             F.count(F.lit(1)).alias("__n"),
             F.sum(F.col("__y").try_cast(_DEC)).alias("__s"),
@@ -186,6 +185,10 @@ class GradientBoostedStumps(PTransform):
 
         model: list[tuple] = []
         pred: Column = F.lit(f0)
+        # the histogram is the working set: round 1 collects at most
+        # L * max_distinct + 1 cells — past that, by pigeonhole, some
+        # feature is un-quantized (mirrors KsDrift/Isotonic)
+        cap = L * self.max_distinct + 1
         for _t in range(self.rounds):
             r = (F.col("__y") - pred).try_cast(_DEC)
             # one native Expand — GROUPING SETS ((f1), (f2), ...) —
@@ -194,22 +197,22 @@ class GradientBoostedStumps(PTransform):
             # as the previous explode-of-structs melt (decimal sums
             # are order-free), without constructing an array of
             # structs per row: measured ~40% less per-round time.
-            grows = (df.groupingSets([[f] for f in fs], *fs)
+            # Cells whose value is NULL (a value the double cast
+            # rejected) are dropped: only the grouped feature is
+            # non-NULL in a cell, so coalesce finds it.
+            cells = (df.groupingSets([[f] for f in fs], *fs)
                      .agg(F.grouping_id().alias("__g"),
                           F.sum(r).alias("s"),
                           F.count(r).alias("c"),
                           F.count(F.lit(1)).alias("rows"))
-                     .collect())
+                     .where(F.coalesce(*fs).isNotNull()))
+            grows = (cells.limit(cap) if _t == 0 else cells).collect()
             hist = []
             for g in grows:
                 f = fs[gid_of[g["__g"]]]
                 hist.append({"f": f, "v": g[f], "s": g["s"],
                              "c": g["c"], "rows": g["rows"]})
             if _t == 0:
-                # feature histograms are the working set: fail fast
-                # if a feature is un-quantized (mirrors
-                # KsDrift/Isotonic) — the first round's cells per
-                # feature ARE the distinct counts
                 from collections import Counter
 
                 nd = Counter(h["f"] for h in hist)
@@ -217,8 +220,8 @@ class GradientBoostedStumps(PTransform):
                     if nd[f] > self.max_distinct:
                         raise ValueError(
                             f"GradientBoostedStumps: feature {f!r} "
-                            f"has {nd[f]} distinct values > "
-                            f"max_distinct {self.max_distinct} — "
+                            f"has more than max_distinct "
+                            f"{self.max_distinct} distinct values — "
                             f"quantize it upstream")
             bad = sum(h["rows"] - h["c"] for h in hist)
             if bad:

@@ -196,7 +196,7 @@ class IsolationForest(PTransform):
             .withColumn("__node", F.lit(1)))
         # non-eager: depth 0's stats collect is the sole first
         # consumer and materializes the sample in the same job
-        # (guide §1.2 one-job-per-round; the star-CC posture)
+        # (guide §1.2 one-job-per-round)
         samp = samp.localCheckpoint(eager=False)
         gkeys = ["__g"] if gcol else []
         gcode = {g: i for i, g in enumerate(groups)}

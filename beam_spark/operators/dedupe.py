@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beam_spark.pcollection import PCollection, PTransform, track_cache
+from beam_spark.operators.graph import _fixed_point
 from beam_spark.operators.text import tokens, word_shingles, word_shingles_on
 
 # Deterministic MinHash permutation parameters (public Carter-Wegman
@@ -424,10 +425,11 @@ class ConnectedComponents(PTransform):
     Spark design: distributed min-label propagation — labels(node) =
     min(label over undirected neighbors + self), iterated to a fixed
     point. Each round is one shuffle (join on node + min-agg); the
-    driver only sees a changed-row COUNT per round. Near-dup components
+    driver only sees one label sum per round. Near-dup components
     are near-cliques (tiny diameter), so rounds ~ 2-3 in practice;
-    ``max_iterations`` bounds adversarial chains, and every round
-    checkpoints its labels so the plan doesn't grow.
+    ``max_iterations`` bounds adversarial chains. Both algorithms run
+    their rounds through ``graph._fixed_point``, which checkpoints
+    every round so the plan doesn't grow.
 
     ``algorithm='star'`` switches to the alternating large-star /
     small-star formulation (Kiveris et al., "Connected Components in
@@ -477,15 +479,8 @@ class ConnectedComponents(PTransform):
         each node toward a smaller node of its component; at the fixed
         point it is a star forest (v -> component min). Convergence is
         detected by an order-insensitive edge-set fingerprint
-        (count + sum of per-edge hashes) going stable — both phases are
-        deterministic given the edge SET, so equal fingerprints mean
-        equal sets here."""
+        (count + sum of per-edge hashes) going stable."""
         ic, jc = self.i_col, self.j_col
-        # NON-eager in-loop checkpoints (here and per round below):
-        # eager=True costs a dedicated materialization job per call,
-        # and every one of them is immediately followed by a tiny
-        # action (the fingerprint) that can do the materializing —
-        # one job per round instead of two, identical arithmetic.
         edges = (pcoll.df
                  .select(F.greatest(F.col(ic), F.col(jc)).alias("u"),
                          F.least(F.col(ic), F.col(jc)).alias("v"))
@@ -496,13 +491,6 @@ class ConnectedComponents(PTransform):
                  .union(pcoll.df.select(F.col(jc).alias("node")))
                  .distinct()
                  .localCheckpoint(eager=False))
-
-        def fingerprint(e):
-            row = e.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h")
-            ).first()
-            return (row["n"], row["h"])
 
         def large_star(e):
             # undirected view; m(u) = min over N(u) ∪ {u}; for every
@@ -531,43 +519,21 @@ class ConnectedComponents(PTransform):
                     .filter(F.col("u") != F.col("v"))
                     .distinct())
 
-        prev_fp = fingerprint(edges)
-        converged = False
-        # TWO rounds per driver job (optimization guide §1.2 "remove
-        # passes"): the fingerprint action materializes a batch of two
-        # large+small rounds (each round still lineage-cut by its own
-        # non-eager checkpoint inside the same job) instead of one.
-        # Correctness is unchanged: rounds are deterministic functions
-        # of the edge SET and the set only contracts toward the star
-        # forest, so a fixed point of one round is a fixed point of
-        # two — equal batch-end fingerprints still mean convergence,
-        # and a graph that converges mid-batch just replays one
-        # identity round inside the job. The round BUDGET is shared
-        # (each batch consumes two of max_iterations), so the
-        # nonconverged bound is the same.
-        rounds_left = self.max_iterations
-        while rounds_left > 0:
-            mid = None
-            stepped = small_star(large_star(edges)).localCheckpoint(
-                eager=False)
-            rounds_left -= 1
-            if rounds_left > 0:
-                mid = stepped
-                stepped = small_star(large_star(stepped)).localCheckpoint(
-                    eager=False)
-                rounds_left -= 1
-            fp = fingerprint(stepped)
-            if edges is not pcoll.df:
-                edges.unpersist()
-            if mid is not None:
-                # release the intra-batch round's checkpoint — at
-                # scale a leaked cached frame per batch is data-sized
-                mid.unpersist()
-            edges = stepped
-            if fp == prev_fp:
-                converged = True
-                break
-            prev_fp = fp
+        def changed(new, prev):
+            # edge-set fingerprints (count, sum of per-edge hashes),
+            # new minus prev in one pass: both phases are deterministic
+            # given the edge SET, so equal fingerprints mean equal sets
+            h = F.xxhash64("u", "v").cast("decimal(38,0)")
+            row = (new.select(F.lit(1).alias("n"), h.alias("h"))
+                   .unionAll(prev.select(F.lit(-1).alias("n"),
+                                         (-h).alias("h")))
+                   .agg(F.sum("n").alias("n"), F.sum("h").alias("h"))
+                   .first())
+            return bool(row["n"]) or bool(row["h"])
+
+        edges, _, converged = _fixed_point(
+            edges, lambda e: small_star(large_star(e)),
+            self.max_iterations, changed)
         if not converged:
             self._nonconverged()
         # at the fixed point edges form a star forest: u -> its root.
@@ -585,10 +551,6 @@ class ConnectedComponents(PTransform):
             return self._expand_star(pcoll)
 
         ic, jc = self.i_col, self.j_col
-        # convergence check sums labels in DECIMAL(38,0): a bigint sum
-        # wraps silently for node ids near 2^62 and could fake (or hide)
-        # a fixed point
-        dec_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
         edges = pcoll.df.select(F.col(ic).alias("a"), F.col(jc).alias("b"))
         # undirected: both directions, once
         sym = edges.union(edges.select(F.col("b").alias("a"),
@@ -596,64 +558,36 @@ class ConnectedComponents(PTransform):
         sym.persist()
         # seed with min(self, direct neighbors) — equivalent to one
         # propagation round from identity labels, one shuffle cheaper
-        labels = (sym.groupBy(F.col("a").alias("node"))
-                  .agg(F.least(F.min("a"), F.min("b")).alias("comp")))
-        labels.persist()
-        prev_sum = labels.agg(dec_sum).first()[0]  # materializes too
-        converged = False
+        seed = (sym.groupBy(F.col("a").alias("node"))
+                .agg(F.least(F.min("a"), F.min("b")).alias("comp"))
+                .localCheckpoint(eager=False))
 
-        def _propagate(lab):
-            # candidate labels: own + min over neighbors' current
-            # labels. localCheckpoint, not just persist: each round's
-            # plan references the previous round's, so without lineage
-            # truncation the logical plan DOUBLES per iteration and a
-            # >10-round graph (long chain) OOMs the driver on plan
-            # objects alone
+        def propagate(lab):
+            # candidate labels: own + min over neighbors' current labels
             neighbor = (sym.join(lab, sym["b"] == lab["node"])
                         .select(sym["a"].alias("node"),
                                 F.col("comp")))
             return (lab.select("node", "comp").union(neighbor)
                     .groupBy("node")
-                    .agg(F.min("comp").alias("comp"))
-                    .localCheckpoint(eager=False))
+                    .agg(F.min("comp").alias("comp")))
 
-        # TWO propagation rounds per driver job (guide §1.2): the sum
-        # action materializes a batch of two checkpointed rounds.
-        # Labels only ever DECREASE under min-propagation, so an
-        # unchanged sum across a two-round batch still means a fixed
-        # point (a strictly earlier fixed point just replays identity
-        # rounds inside the job — same labels out). The round budget
-        # is shared: each batch consumes two of max_iterations.
-        rounds_left = self.max_iterations
-        while rounds_left > 0:
-            mid = None
-            new_labels = _propagate(labels)
-            rounds_left -= 1
-            if rounds_left > 0:
-                mid = new_labels
-                new_labels = _propagate(new_labels)
-                rounds_left -= 1
-            # convergence via one agg, no join (see dec_sum above)
-            new_sum = new_labels.agg(dec_sum).first()[0]
-            labels.unpersist()
-            if mid is not None:
-                # release the intra-batch round's checkpoint — at
-                # scale a leaked cached frame per batch is data-sized
-                mid.unpersist()
-            labels = new_labels
-            if new_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = new_sum
+        def changed(new, prev):
+            # labels only ever DECREASE, so equal label sums over the
+            # same nodes mean equal labels; summed in DECIMAL(38,0)
+            # because a bigint sum wraps silently for node ids near
+            # 2^62 and could fake (or hide) a fixed point
+            c = F.col("comp").cast("decimal(38,0)")
+            return bool(new.select(c.alias("c"))
+                        .unionAll(prev.select((-c).alias("c")))
+                        .agg(F.sum("c")).first()[0])
+
+        labels, _, converged = _fixed_point(
+            seed, propagate, self.max_iterations, changed)
         if not converged:
             self._nonconverged()
-        # truncate lineage and release every cached intermediate: the
-        # result is materialized once, the iteration caches don't leak
-        # into the caller's session
-        final = labels.select("node", "comp").localCheckpoint(eager=True)
-        labels.unpersist()
+        # the labels' lineage is cut, so the edge cache can go
         sym.unpersist()
-        return pcoll.with_df(final)
+        return pcoll.with_df(labels)
 
 
 class Decontaminate(PTransform):
@@ -875,12 +809,11 @@ class FuzzyDedupKeep(PTransform):
 
     def __init__(self, text_col: str = "text", id_col: str = "doc_id",
                  n: int = 3, bands: int = 16, rows_per_band: int = 8,
-                 threshold: float = 0.6, cc_algorithm: str = "label",
-                 label=None):
+                 threshold: float = 0.6, label=None):
         super().__init__(label)
         self.text_col, self.id_col, self.n = text_col, id_col, n
         self.bands, self.rows_per_band = bands, rows_per_band
-        self.threshold, self.cc_algorithm = threshold, cc_algorithm
+        self.threshold = threshold
 
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
@@ -892,8 +825,7 @@ class FuzzyDedupKeep(PTransform):
         # recompute the minhash lineage. CC checkpoints its labels, so
         # the cache is releasable right after the (eager) loop.
         pairs.df.persist()
-        cc = (pairs | ConnectedComponents(
-            algorithm=self.cc_algorithm)).df
+        cc = (pairs | ConnectedComponents()).df
         pairs.df.unpersist()
         out = (pcoll.df.select(idc)
                .join(cc, on=F.col(idc) == cc["node"], how="left")

@@ -3,17 +3,87 @@
 PageRank is the classic link-quality score of web-corpus curation
 (Common Crawl publishes host-level ranks precisely so dataset builders
 can weight/filter pages); the reference has no built-in graph library,
-so like ConnectedComponents (operators/dedupe.py) this re-expresses the
-iterative algorithm in the scale-safe DataFrame shape: one keyed join +
-one keyed aggregation per round, per-round localCheckpoint to cut the
-growing lineage.
+so like ConnectedComponents (operators/dedupe.py) this re-expresses
+each iterative algorithm in the scale-safe DataFrame shape: one keyed
+join + one keyed aggregation per round. Every iterative loop here and
+in ConnectedComponents runs through ``_fixed_point``, which decides
+for all of them how a round is checkpointed, how many rounds run per
+convergence check and when a superseded round is released.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from beam_spark.pcollection import PCollection, PTransform
+
+
+def _undirected(df: DataFrame, src: str, dst: str,
+                weight: str | None = None) -> DataFrame:
+    """Canonical undirected simple edges ``(a, b)`` with ``a < b``:
+    self-loops dropped, one row per unordered pair. With ``weight``,
+    parallel edges sum their weights into ``__w`` (double)."""
+    e = (df.select(F.least(F.col(src), F.col(dst)).alias("a"),
+                   F.greatest(F.col(src), F.col(dst)).alias("b"),
+                   *([F.col(weight).cast("double").alias("__w")]
+                     if weight else []))
+         .where(F.col("a") != F.col("b")))
+    if weight:
+        return e.groupBy("a", "b").agg(F.sum("__w").alias("__w"))
+    return e.distinct()
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD behind a localCheckpoint'ed frame (its plan is a
+    LogicalRDD over it)."""
+    return df._jdf.queryExecution().analyzed().rdd()
+
+
+def _fixed_point(start: DataFrame, step, rounds: int, changed=None,
+                 per_check: int = 1):
+    """Iterate ``step`` (one round: frame -> frame) from ``start`` for
+    at most ``rounds`` rounds. Returns ``(frame, rounds_run,
+    converged)``.
+
+    Without ``changed`` exactly ``rounds`` rounds run (the fixed-count,
+    replayable mode) and ``converged`` is False. With it, the loop
+    calls ``changed(new, prev)`` after every batch of ``per_check``
+    rounds (``prev`` is the frame before the batch, ``new`` its last
+    round) and stops, converged, when it returns False. The budget
+    counts rounds, so the last batch is cut short where it ends. A
+    batch of two rounds is only sound for monotone updates, where an
+    unchanged frame across the batch is a fixed point.
+
+    One rule for each decision, in every loop:
+    - checkpoint: each round is localCheckpointed so the plan stays
+      one round deep. It is eager when no check follows it (fixed
+      mode), else lazy, so that the check materializes it — at best
+      ``changed`` is one action over both frames;
+    - release: once the newest round is materialized (its lineage
+      cut), every round it superseded is dropped from the block
+      manager. ``DataFrame.unpersist`` cannot do this — it only
+      uncaches cached queries — so the context drops the RDD, which
+      also skips the warning ``RDD.unpersist`` logs for a locally
+      checkpointed RDD. ``start`` belongs to the caller and is kept.
+    """
+    sc = start.sparkSession.sparkContext._jsc.sc()
+    cur, run, stale = start, 0, []
+    while run < rounds:
+        prev = cur
+        for _ in range(min(per_check, rounds - run) if changed else 1):
+            if cur is not start:
+                stale.append(cur)
+            cur = step(cur).localCheckpoint(eager=changed is None)
+            run += 1
+        done = changed is not None and not changed(cur, prev)
+        if _checkpoint_rdd(cur).isCheckpointed():
+            for f in stale:
+                sc.unpersistRDD(_checkpoint_rdd(f).id(), False)
+            stale = []
+        if done:
+            return cur, run, True
+    return cur, run, False
 
 
 class PageRank(PTransform):
@@ -34,9 +104,8 @@ class PageRank(PTransform):
     nodes-sized — small relative to edges; Spark picks broadcast
     below the threshold and a shuffle hash join above, both correct),
     then one dst-keyed aggregation; the dangling term is a 1-row
-    broadcast. Each round localCheckpoints (eager) so the plan stays
-    one-round deep instead of `iterations` joins tall — the identical
-    posture as ConnectedComponents.
+    broadcast. Rounds run through ``_fixed_point``, so the plan stays
+    one round deep instead of `iterations` joins tall.
 
     Output: (node, pr) for every node, sum(pr) == 1 up to float.
     """
@@ -59,9 +128,9 @@ class PageRank(PTransform):
 
         ``tol``: optional L-inf convergence threshold — when set,
         ``iterations`` becomes a CAP and the loop exits as soon as
-        max |pr_{t+1} - pr_t| < tol (the delta check rides the same
-        per-round action the eager localCheckpoint already pays, so
-        early exit saves whole rounds, each a join + shuffle).
+        max |pr_{t+1} - pr_t| < tol (the delta check is the job that
+        materializes the round, so early exit saves whole rounds, each
+        a join + shuffle).
         ``rounds_run_`` records the executed round count after
         expansion. Fixed-iteration mode (tol=None, the default) stays
         the value-oracle-able posture."""
@@ -81,10 +150,6 @@ class PageRank(PTransform):
 
     def expand(self, pcoll: PCollection) -> PCollection:
         d, wc = self.damping, self.weight
-        # setup checkpoints are NON-eager: nodes is materialized by
-        # the count right below, edges/deg by round 1's ranks job —
-        # lineage is still cut at first materialization, but no
-        # dedicated per-frame materialization jobs are paid
         edges = (pcoll.df
                  .select(F.col(self.src).alias("src"),
                          F.col(self.dst).alias("dst"),
@@ -119,10 +184,10 @@ class PageRank(PTransform):
         else:
             rv = (nodes.withColumn("__r", F.lit(1.0 / n_nodes))
                   .localCheckpoint(eager=False))
-        ranks = rv.select("node", F.col("__r").alias("pr"))
-        self.rounds_run_ = 0
-        for _ in range(self.iterations):
-            prev = ranks
+        share = (F.col("pr") * F.col("__w") / F.col("__deg")
+                 if wc else F.col("pr") / F.col("__deg"))
+
+        def step(ranks):
             # mass sitting on dangling nodes this round (1-row frame,
             # broadcast into the update — no collect in the loop);
             # it redistributes by the restart vector
@@ -130,44 +195,31 @@ class PageRank(PTransform):
                                    "left_anti")
                         .agg(F.coalesce(F.sum("pr"), F.lit(0.0))
                              .alias("__dm")))
-            share = (F.col("pr") * F.col("__w") / F.col("__deg")
-                     if wc else F.col("pr") / F.col("__deg"))
             contrib = (edges
                        .join(ranks, edges["src"] == ranks["node"])
                        .join(deg, "src")
                        .groupBy("dst")
                        .agg(F.sum(share).alias("__m")))
-            # tol mode: non-eager — the delta action below is the
-            # round's first consumer and materializes it in the same
-            # job (guide §1.2). Fixed mode keeps the eager
-            # checkpoint: it is the round's only action, and the
-            # next round references ranks through PARALLEL branches
-            # (dangling + contrib) that would race the cache.
-            ranks = (rv
-                     .join(contrib, rv["node"] == contrib["dst"],
-                           "left")
-                     .crossJoin(F.broadcast(dangling))
-                     .select(
-                         rv["node"],
-                         ((1.0 - d) * F.col("__r")
-                          + d * (F.coalesce(F.col("__m"), F.lit(0.0))
-                                 + F.col("__dm") * F.col("__r")))
-                         .alias("pr"))
-                     .localCheckpoint(eager=self.tol is None))
-            self.rounds_run_ += 1
-            if self.tol is not None:
-                # one tiny action over two node-sized checkpointed
-                # frames — both sides already materialized, so the
-                # delta scan is cheap relative to the edge join it
-                # can save by exiting early
-                delta = (ranks.alias("n")
-                         .join(prev.alias("p"), "node")
-                         .agg(F.max(F.abs(F.col("n.pr")
-                                          - F.col("p.pr")))
-                              .alias("__d"))
-                         .first()["__d"])
-                if delta is not None and delta < self.tol:
-                    break
+            return (rv
+                    .join(contrib, rv["node"] == contrib["dst"], "left")
+                    .crossJoin(F.broadcast(dangling))
+                    .select(
+                        rv["node"],
+                        ((1.0 - d) * F.col("__r")
+                         + d * (F.coalesce(F.col("__m"), F.lit(0.0))
+                                + F.col("__dm") * F.col("__r")))
+                        .alias("pr")))
+
+        def moved(new, prev):
+            # L-inf rank delta over two node-sized frames
+            delta = (new.alias("n").join(prev.alias("p"), "node")
+                     .agg(F.max(F.abs(F.col("n.pr") - F.col("p.pr"))))
+                     .first()[0])
+            return delta is None or delta >= self.tol
+
+        ranks, self.rounds_run_, _ = _fixed_point(
+            rv.select("node", F.col("__r").alias("pr")), step,
+            self.iterations, moved if self.tol is not None else None)
         return pcoll.with_df(ranks)
 
 
@@ -186,12 +238,10 @@ class ShortestPaths(PTransform):
     the oracle compares UNROUNDED.
 
     Scale: per round one join of the dist table (nodes-sized) against
-    edges keyed on src, one dst-keyed min-aggregation; each round
-    localCheckpoints (eager) so the plan stays one round deep —
-    the PageRank/ConnectedComponents posture. Early exit when a round
-    changes nothing (one tiny count action per round over two
-    checkpointed node-sized frames); ``rounds_run_`` records the
-    executed count.
+    edges keyed on src, one dst-keyed min-aggregation, run through
+    ``_fixed_point``. Early exit when a batch of two rounds changes
+    nothing (one count action over two node-sized frames);
+    ``rounds_run_`` records the executed count.
 
     Output: (node, dist) for every REACHED node; unreachable nodes
     are absent (no infinities to carry).
@@ -236,73 +286,50 @@ class ShortestPaths(PTransform):
             # a source is its own predecessor (never NULL: engines
             # disagree on NULL ordering inside struct comparisons)
             dist = dist.withColumn("pred", F.col("node"))
-        # non-eager: the seed table is a LOCAL one-row-per-source
-        # frame — round 1's changed-count materializes it; recompute
-        # (if branches race the cache) is a LocalTableScan, not a
-        # source scan
         dist = dist.localCheckpoint(eager=False)
-        self.rounds_run_ = 0
 
-        def _relax(cur):
-            # one Bellman-Ford round; non-eager checkpoint: the
-            # changed-count action below both computes and stores the
-            # round — one job, not two
+        def relax(cur):
+            # one Bellman-Ford round
             if preds:
-                relax = (edges.join(cur, edges["src"] == cur["node"])
-                         .select(F.col("dst").alias("node"),
-                                 F.struct(
-                                     (F.col("dist") + F.col("__w"))
-                                     .alias("dist"),
-                                     F.col("src").alias("pred"))
-                                 .alias("sp")))
+                cand = (edges.join(cur, edges["src"] == cur["node"])
+                        .select(F.col("dst").alias("node"),
+                                F.struct(
+                                    (F.col("dist") + F.col("__w"))
+                                    .alias("dist"),
+                                    F.col("src").alias("pred"))
+                                .alias("sp")))
                 base = cur.select(
                     "node", F.struct("dist", "pred").alias("sp"))
-                return (base.unionByName(relax)
+                return (base.unionByName(cand)
                         .groupBy("node").agg(F.min("sp").alias("sp"))
                         .select("node",
                                 F.col("sp.dist").alias("dist"),
-                                F.col("sp.pred").alias("pred"))
-                        .localCheckpoint(eager=False))
-            relax = (edges.join(cur, edges["src"] == cur["node"])
-                     .select(F.col("dst").alias("node"),
-                             (F.col("dist") + F.col("__w"))
-                             .alias("dist")))
-            return (cur.unionByName(relax)
-                    .groupBy("node").agg(F.min("dist").alias("dist"))
-                    .localCheckpoint(eager=False))
+                                F.col("sp.pred").alias("pred")))
+            cand = (edges.join(cur, edges["src"] == cur["node"])
+                    .select(F.col("dst").alias("node"),
+                            (F.col("dist") + F.col("__w"))
+                            .alias("dist")))
+            return (cur.unionByName(cand)
+                    .groupBy("node").agg(F.min("dist").alias("dist")))
 
         if preds:
             diff = (F.col("n.dist") != F.col("p.dist")) | (
                 F.col("n.pred") != F.col("p.pred"))
         else:
             diff = F.col("n.dist") != F.col("p.dist")
-        # TWO relaxation rounds per driver job (guide §1.2, the
-        # ConnectedComponents posture): distances/preds only ever
-        # DECREASE under the min, so an unchanged table across a
-        # two-round batch still means a fixed point; a graph that
-        # converges mid-batch replays one identity round inside the
-        # job. The round budget is shared (each batch consumes two of
-        # ``iterations``), so the r-hop exactness bound is unchanged.
-        rounds_left = self.iterations
-        while rounds_left > 0:
-            mid = None
-            new = _relax(dist)
-            rounds_left -= 1
-            self.rounds_run_ += 1
-            if rounds_left > 0:
-                mid = new
-                new = _relax(new)
-                rounds_left -= 1
-                self.rounds_run_ += 1
-            changed = (new.alias("n")
-                       .join(dist.alias("p"), "node", "left")
-                       .where(F.col("p.dist").isNull() | diff)
-                       .count())
-            if mid is not None:
-                mid.unpersist()  # intra-batch round: data-sized at scale
-            dist = new
-            if changed == 0:
-                break
+
+        def changed(new, prev):
+            return (new.alias("n")
+                    .join(prev.alias("p"), "node", "left")
+                    .where(F.col("p.dist").isNull() | diff)
+                    .count()) > 0
+
+        # two rounds per check: distances/preds only ever DECREASE
+        # under the min, so a table unchanged across two rounds is a
+        # fixed point; the round budget is shared, so the r-hop
+        # exactness bound holds
+        dist, self.rounds_run_, _ = _fixed_point(
+            dist, relax, self.iterations, changed, per_check=2)
         return pcoll.with_df(dist)
 
 
@@ -337,14 +364,7 @@ class TriangleCount(PTransform):
         self.src, self.dst = src, dst
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        s, d = self.src, self.dst
-        # canonical undirected simple edges: no self-loops, one row
-        # per unordered pair
-        und = (pcoll.df
-               .select(F.least(F.col(s), F.col(d)).alias("a"),
-                       F.greatest(F.col(s), F.col(d)).alias("b"))
-               .where(F.col("a") != F.col("b"))
-               .distinct())
+        und = _undirected(pcoll.df, self.src, self.dst)
         deg = (und.select(F.explode(F.array("a", "b")).alias("node"))
                .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
         da = deg.select(F.col("node").alias("a"),
@@ -352,14 +372,10 @@ class TriangleCount(PTransform):
         db = deg.select(F.col("node").alias("b"),
                         F.col("deg").alias("db"))
         # orient low (degree, node) -> high: out-degree O(sqrt(m)).
-        # The oriented list is consumed by FOUR downstream branches
-        # (both wedge legs, both closure directions) and each branch
-        # would otherwise re-plan and re-execute the whole
-        # distinct+degree+join pipeline — an unmaterialized tree of
-        # 200+ Exchanges. One eager localCheckpoint (the same posture
-        # as the iterative graph operators) makes the downstream plan
-        # linear in both engines' sense: identical rows, one
-        # materialization, reused everywhere.
+        # The oriented list feeds FOUR downstream branches (both wedge
+        # legs, both closure directions); checkpointed once, they all
+        # read one materialization instead of re-planning the
+        # distinct+degree+join tree (200+ Exchanges) each.
         oriented = (und.join(da, "a").join(db, "b")
                     .select(
                         F.when((F.col("da") < F.col("db"))
@@ -426,13 +442,14 @@ class KCore(PTransform):
     check — the deterministic-replay mode the DuckDB oracle uses
     (peeling is idempotent after convergence, so equality holds round
     for round); default (None) peels to fixpoint with a per-round
-    convergence count, capped at ``max_rounds``.
+    convergence check, capped at ``max_rounds``.
 
     Scale: each round is one edge semi-join against the (shrinking)
-    survivor set + one degree aggregation, localCheckpointed to cut
-    lineage — the ConnectedComponents posture. Peeling converges in
-    at most O(peeled nodes) rounds but in practice a handful: each
-    round removes every currently-underdegree node at once.
+    survivor set + one degree aggregation, run through
+    ``_fixed_point``; the convergence check asks whether the round
+    peeled any edge. Peeling converges in at most O(peeled nodes)
+    rounds but in practice a handful: each round removes every
+    currently-underdegree node at once.
 
     Output: (node, degree) for k-core members, degree measured INSIDE
     the core.
@@ -451,12 +468,8 @@ class KCore(PTransform):
                              else int(fixed_rounds))
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        k, s, d = self.k, self.src, self.dst
-        und = (pcoll.df
-               .select(F.least(F.col(s), F.col(d)).alias("a"),
-                       F.greatest(F.col(s), F.col(d)).alias("b"))
-               .where(F.col("a") != F.col("b"))
-               .distinct()
+        k = self.k
+        und = (_undirected(pcoll.df, self.src, self.dst)
                .localCheckpoint(eager=True))
 
         def degrees(edges):
@@ -465,34 +478,23 @@ class KCore(PTransform):
                     .groupBy("node")
                     .agg(F.count(F.lit(1)).alias("degree")))
 
-        edges = und
-        survivors = None
-        rounds = (self.fixed_rounds if self.fixed_rounds is not None
-                  else self.max_rounds)
-        prev_n = None
-        for _ in range(rounds):
-            deg = degrees(edges)
-            # non-eager: the first job that reads it (the count below
-            # in convergence mode, else the edges checkpoint) stores
-            # its blocks, and both semi-joins then read those blocks
-            survivors = (deg.where(F.col("degree") >= k)
-                         .select("node")
-                         .localCheckpoint(eager=False))
-            if self.fixed_rounds is None:
-                n = survivors.count()
-                if n == prev_n:
-                    break
-                prev_n = n
-                if n == 0:
-                    break
-            sa = survivors.select(F.col("node").alias("a"))
-            sb = survivors.select(F.col("node").alias("b"))
-            # every round's edges checkpoint is eager in both modes
-            # (PageRank's fixed-mode posture): the next round reads it
-            # twice, through degrees()' two unionAll branches
-            edges = (und.join(sa, "a", "left_semi")
-                     .join(sb, "b", "left_semi")
-                     .localCheckpoint(eager=True))
+        def peel(edges):
+            survivors = (degrees(edges).where(F.col("degree") >= k)
+                         .select("node"))
+            return (und
+                    .join(survivors.select(F.col("node").alias("a")),
+                          "a", "left_semi")
+                    .join(survivors.select(F.col("node").alias("b")),
+                          "b", "left_semi"))
+
+        def peeled(new, prev):
+            # edges only shrink, so an edge missing from new is a change
+            return not prev.join(new, ["a", "b"], "left_anti").isEmpty()
+
+        fixed = self.fixed_rounds is not None
+        edges, _, _ = _fixed_point(
+            und, peel, self.fixed_rounds if fixed else self.max_rounds,
+            None if fixed else peeled)
         out = (degrees(edges).where(F.col("degree") >= k)
                .select("node", F.col("degree").cast("long")
                        .alias("degree")))
@@ -517,16 +519,15 @@ class LabelPropagation(PTransform):
     round (synchronous LPA can 2-cycle on bipartite structures, so
     fixpoint is not guaranteed; fixed-round replay sidesteps that and
     is the value-oracle-able posture). Default (None): run until no
-    label changes, capped at ``max_rounds`` (the change count rides
-    the per-round action the eager localCheckpoint already pays).
+    label changes, capped at ``max_rounds`` (the change count is the
+    job that materializes the round).
 
     Scale: per round, ONE join of the (node, neighbor) adjacency
     against the nodes-sized label frame, one (node, label) count
     aggregation, one per-node arg-max — all keyed shuffles of
-    edge-bound volume, localCheckpointed per round to cut lineage
-    (the ConnectedComponents posture). Tiebreak is an order-free
-    ``min(struct(-cnt, lbl))`` aggregate: no window sort over the
-    full corpus.
+    edge-bound volume, run through ``_fixed_point``. Tiebreak is an
+    order-free ``min(struct(-cnt, lbl))`` aggregate: no window sort
+    over the full corpus.
 
     ``weight``: optional edge-weight column — a neighbor's label
     counts by summed edge weight instead of multiplicity (parallel
@@ -556,19 +557,9 @@ class LabelPropagation(PTransform):
         self.rounds_run_ = None
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        s, d, wc = self.src, self.dst, self.weight
-        base = (pcoll.df
-                .select(F.least(F.col(s), F.col(d)).alias("a"),
-                        F.greatest(F.col(s), F.col(d)).alias("b"),
-                        *([F.col(wc).cast("double").alias("__w")]
-                          if wc else []))
-                .where(F.col("a") != F.col("b")))
-        if wc:
-            und = (base.groupBy("a", "b")
-                   .agg(F.sum("__w").alias("__w"))
-                   .localCheckpoint(eager=True))
-        else:
-            und = base.distinct().localCheckpoint(eager=True)
+        wc = self.weight
+        und = (_undirected(pcoll.df, self.src, self.dst, weight=wc)
+               .localCheckpoint(eager=True))
         wcols = [F.col("__w")] if wc else []
         adj = (und.select(F.col("a").alias("node"),
                           F.col("b").alias("nb"), *wcols)
@@ -577,37 +568,31 @@ class LabelPropagation(PTransform):
         labels = (adj.select("node").distinct()
                   .withColumn("lbl", F.col("node"))
                   .localCheckpoint(eager=True))
-        rounds = (self.fixed_rounds if self.fixed_rounds is not None
-                  else self.max_rounds)
-        self.rounds_run_ = 0
-        for _ in range(rounds):
-            prev = labels
+
+        def step(labels):
             cnt = (adj
                    .join(labels.select(F.col("node").alias("nb"),
                                        "lbl"), "nb")
                    .groupBy("node", "lbl")
                    .agg((F.sum("__w") if wc else F.count(F.lit(1)))
                         .alias("__c")))
-            # convergence mode: non-eager — the changed-count below
-            # materializes the round in the same job (guide §1.2).
-            # Fixed mode keeps the eager checkpoint: it is the
-            # round's only action.
-            labels = (cnt
-                      .groupBy("node")
-                      .agg(F.min(F.struct(
-                          (-F.col("__c")).alias("__nc"),
-                          F.col("lbl"))).alias("__m"))
-                      .select("node", F.col("__m.lbl").alias("lbl"))
-                      .localCheckpoint(
-                          eager=self.fixed_rounds is not None))
-            self.rounds_run_ += 1
-            if self.fixed_rounds is None:
-                changed = (labels.alias("n")
-                           .join(prev.alias("p"), "node")
-                           .where(F.col("n.lbl") != F.col("p.lbl"))
-                           .count())
-                if changed == 0:
-                    break
+            return (cnt
+                    .groupBy("node")
+                    .agg(F.min(F.struct(
+                        (-F.col("__c")).alias("__nc"),
+                        F.col("lbl"))).alias("__m"))
+                    .select("node", F.col("__m.lbl").alias("lbl")))
+
+        def changed(new, prev):
+            return (new.alias("n")
+                    .join(prev.alias("p"), "node")
+                    .where(F.col("n.lbl") != F.col("p.lbl"))
+                    .count()) > 0
+
+        fixed = self.fixed_rounds is not None
+        labels, self.rounds_run_, _ = _fixed_point(
+            labels, step, self.fixed_rounds if fixed else self.max_rounds,
+            None if fixed else changed)
         out = labels.select("node", F.col("lbl").alias("community"))
         return pcoll.with_df(out)
 
@@ -654,15 +639,10 @@ class Modularity(PTransform):
         self.node_col, self.community_col = node_col, community_col
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        s, d = self.src, self.dst
         com = self.communities.select(
             F.col(self.node_col).alias("node"),
             F.col(self.community_col).alias("c"))
-        und = (pcoll.df
-               .select(F.least(F.col(s), F.col(d)).alias("a"),
-                       F.greatest(F.col(s), F.col(d)).alias("b"))
-               .where(F.col("a") != F.col("b"))
-               .distinct())
+        und = _undirected(pcoll.df, self.src, self.dst)
         tagged = (und
                   .join(com.select(F.col("node").alias("a"),
                                    F.col("c").alias("ca")), "a", "left")
@@ -718,8 +698,7 @@ class Hits(PTransform):
     Scale: per round, TWO node-keyed joins of the score table
     (nodes-sized) against the edge list + one dst-keyed and one
     src-keyed aggregation; the normalizer is a 1-row broadcast. Each
-    half-step localCheckpoints (eager) so the plan stays one round
-    deep — the PageRank/ConnectedComponents posture.
+    half-step localCheckpoints so the plan stays one round deep.
 
     Output: (node, hub, authority), each rounded 9 (per-group float
     sum order is the only cross-engine difference; round 9 absorbs it
@@ -740,9 +719,6 @@ class Hits(PTransform):
                  .select(F.col(self.src).alias("src"),
                          F.col(self.dst).alias("dst"))
                  .localCheckpoint(eager=True))
-        # non-eager: the count right below materializes nodes in the
-        # same job (guide §1.2); edges above stays eager — the two
-        # union branches here would otherwise each re-scan the source
         nodes = (edges.select(F.col("src").alias("node"))
                  .unionByName(edges.select(F.col("dst").alias("node")))
                  .distinct()
@@ -830,17 +806,12 @@ class LinkPrediction(PTransform):
             raise ValueError("max_neighbor_degree must be >= 2")
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        s, d = self.src, self.dst
         # und feeds both wedge legs, the existing-edge anti-join and
         # (through deg) both endpoint-degree joins — unmaterialized,
         # the distinct tree is planned and executed ~13 times (the
-        # TriangleCount pathology). Two eager localCheckpoints keep
-        # the downstream plan linear over identical row sets.
-        und = (pcoll.df
-               .select(F.least(F.col(s), F.col(d)).alias("a"),
-                       F.greatest(F.col(s), F.col(d)).alias("b"))
-               .where(F.col("a") != F.col("b"))
-               .distinct()
+        # TriangleCount pathology); checkpointed, und and deg are read
+        # as one materialization each.
+        und = (_undirected(pcoll.df, self.src, self.dst)
                .localCheckpoint(eager=True))
         # adj stays the two-block unionAll (NOT an explode): the
         # wedge aggregation sums doubles downstream, and the union of

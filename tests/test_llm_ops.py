@@ -1635,6 +1635,53 @@ def test_shortest_paths_semantics(spark):
         ShortestPaths([0], iterations=0)
 
 
+def test_fixed_point_loop_rules(spark):
+    """graph._fixed_point on one 5-node chain: a fixed count runs every
+    round; a check exits early; a two-round batch shares the round
+    budget (ShortestPaths(iterations=3) relaxes three times, not
+    four); and superseded rounds are released, lazy or eager —
+    PageRank(iterations=10) keeps its four setup frames plus one round
+    cached, not 14. The unconverged warn/raise paths are covered by
+    test_connected_components_large_ids_and_nonconvergence."""
+    from beam_spark.operators.graph import (PageRank, ShortestPaths,
+                                            _fixed_point)
+
+    chain = spark.createDataFrame([(k, k + 1) for k in range(4)],
+                                  "src long, dst long")   # 0 -> ... -> 4
+    jsc = spark.sparkContext._jsc
+
+    def cached_by(fn):
+        before = set(jsc.getPersistentRDDs().keySet())
+        out = fn()
+        return out, len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    # a round adds the next hop to the reached set: the fixed point
+    # {0..4} is reached after 4 rounds and detected by the 5th
+    def hop(reached):
+        nxt = chain.join(reached, chain["src"] == reached["node"])
+        return (reached.unionByName(nxt.select(F.col("dst").alias("node")))
+                .distinct())
+
+    def grew(new, prev):
+        return not new.join(prev, "node", "left_anti").isEmpty()
+
+    start = spark.createDataFrame([(0,)], "node long")
+    (out, run, conv), kept = cached_by(
+        lambda: _fixed_point(start, hop, 20, grew))
+    assert (out.count(), run, conv, kept) == (5, 5, True, 1)
+
+    sp = ShortestPaths([0], iterations=3)
+    dist = {r["node"]: r["dist"] for r in
+            (PCollection(chain) | sp).df.collect()}
+    assert sp.rounds_run_ == 3
+    assert dist == {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}
+
+    pr = PageRank(iterations=10)
+    _, kept = cached_by(lambda: (PCollection(chain) | pr).df.collect())
+    assert pr.rounds_run_ == 10
+    assert kept <= 4 + 1, kept          # edges/nodes/deg/rv + one round
+
+
 def test_record_linkage_score(spark):
     """RecordLinkageScore: agreement adds log2(m/u), disagreement adds
     log2((1-m)/(1-u)), NULL on either side contributes nothing;
