@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beam_spark import queries as Q
+from beam_spark.operators.core import fan_out
 from beam_spark.queries import dec, dsum, table
 
 _TOK = Q._TOK  # duckdb-side tokenizer snippet
@@ -699,9 +700,9 @@ def q_stats_moments(spark, sf_dir):
         # the scan's single task (single-row-group input); the Poisson
         # weight is a pure function of (event_id, b) and both sums are
         # exact decimals, so partitioning cannot change the CI
-        ev = Q.fan_out(table(spark, sf_dir, "events").df.where(
+        ev = fan_out(table(spark, sf_dir, "events").df.where(
             "user_id % 10 = 0").selectExpr(
-            "event_type", "event_id", "value"), spark)
+            "event_type", "event_id", "value"))
         return (_PC(ev) | BootstrapCI(
             "value", id_col="event_id", b=100, alpha=0.05,
             keys="event_type")).df.selectExpr(
@@ -1568,7 +1569,7 @@ def q_simhash_fingerprints(spark, sf_dir):
     from beam_spark.operators.dedupe import SimHash
     from beam_spark.pcollection import PCollection as _PC
 
-    docs = Q.fan_out(table(spark, sf_dir, "documents").df, spark)
+    docs = fan_out(table(spark, sf_dir, "documents").df)
     fp = (_PC(docs) | SimHash(hash_fn="md5")).df
     return fp.select(
         "doc_id",

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from beam_spark.operators.core import fan_out
 from beam_spark.pcollection import PCollection, PTransform
 
 _DEC = "decimal(16,9)"
@@ -130,9 +131,7 @@ class GradientBoostedStumps(PTransform):
               .select(F.col(yc).cast("double").alias("__y"),
                       *[F.col(f).cast("double").alias(f) for f in fs]))
         spark = pcoll.df.sparkSession
-        par = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
+        df = fan_out(df)
         # ONE setup pass BEFORE checkpointing — row count (the heap
         # fail-fast: the localCheckpoint pins the whole (1 + F)-
         # column double frame in this JVM's block manager, and a frame

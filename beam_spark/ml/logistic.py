@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from beam_spark.operators.core import fan_out
 from beam_spark.pcollection import PCollection, PTransform
 
 _DEC_G = "decimal(16,9)"
@@ -100,12 +101,9 @@ class LogisticFit(PTransform):
                       .alias("__y"),
                       *[F.col(f).cast("double").alias(f) for f in fs]))
         # spread the T scans: a small parquet source may arrive in 1-2
-        # partitions, serializing every gradient pass — repartition to
-        # the cluster's parallelism before checkpointing (gradients
-        # are order-free decimal sums, so this cannot change values)
-        par = pcoll.df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < par:
-            df = df.repartition(par)
+        # partitions, serializing every gradient pass (gradients are
+        # order-free decimal sums, so this cannot change values)
+        df = fan_out(df)
         # T scans, one lineage; non-eager — the count right below is
         # the sole first consumer and materializes the frame in the
         # same job (guide §1.2 one-job-per-round)

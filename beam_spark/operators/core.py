@@ -164,7 +164,7 @@ class Partition(PTransform):
     """Split into n PCollections (core.py:3809-3851).
 
     Spark has no multi-output operator; we add a partition column once,
-    persist, and hand back n filtered views (single upstream computation).
+    pin it, and hand back n filtered views (single upstream computation).
     """
 
     def __init__(self, partition_expr, n: int, label=None):
@@ -174,8 +174,7 @@ class Partition(PTransform):
     def expand(self, pcoll: PCollection) -> list[PCollection]:
         e = self.partition_expr
         col = F.expr(e) if isinstance(e, str) else e
-        tagged = pcoll.df.withColumn("__part", col)
-        tagged.persist()
+        tagged = self.pin(pcoll.df.withColumn("__part", col), pcoll)
         return [pcoll.with_df(tagged.filter(F.col("__part") == i).drop("__part"))
                 for i in range(self.n)]
 
@@ -256,6 +255,21 @@ class Reshuffle(PTransform):
         else:
             df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
         return pcoll.with_df(df)
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Scale-adaptive read fan-out for expression-heavy zero-shuffle
+    pipelines: a single-row-group parquet file scans as ONE task at any
+    core count, so a per-row expression chain after it runs
+    single-threaded however many cores the session has. Round-robin
+    repartition to the session's default parallelism ONLY when the scan
+    is under-parallel — on a real multi-file table (scan partitions >=
+    parallelism) this is a no-op, so nothing extra is shuffled at
+    scale."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < p:
+        return df.repartition(p)
+    return df
 
 
 class WithTimestamps(PTransform):
@@ -432,7 +446,7 @@ class LogElements(PTransform):
 
 class Tee(PTransform):
     """Side-effect branch (util.py:2576): run a consumer on the
-    PCollection, return the input unchanged. Persists to avoid
+    PCollection, return the input unchanged. Pins the input to avoid
     recomputation of the shared upstream."""
 
     def __init__(self, consumer: Callable, label=None):
@@ -440,7 +454,7 @@ class Tee(PTransform):
         self.consumer = consumer
 
     def expand(self, pcoll: PCollection) -> PCollection:
-        pcoll.df.persist()
+        self.pin(pcoll.df, pcoll)
         self.consumer(pcoll)
         return pcoll
 

@@ -30,15 +30,27 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from beam_spark.pcollection import PCollection, PTransform, track_cache
+from beam_spark.pcollection import PCollection, PTransform
 from beam_spark.operators.graph import _fixed_point
-from beam_spark.operators.text import tokens, word_shingles, word_shingles_on
+from beam_spark.operators.text import tokens, word_shingles_on
 
 # Deterministic MinHash permutation parameters (public Carter-Wegman
 # construction): h_i(x) = (a_i * x + b_i) mod p over the Mersenne prime
 # 2^31-1. The 31-bit universe keeps a_i * h inside int64 (ANSI mode
 # errors on overflow) while leaving minhash collision noise negligible.
 _MERSENNE_31 = (1 << 31) - 1
+
+
+def _shingle_sets(df: DataFrame, idc: str, text_col: str,
+                  n: int) -> DataFrame:
+    """(idc, sh): the word n-gram array of every document with at least
+    ``n`` tokens. The token count is filtered BEFORE shingling: a filter
+    on size(sh) pushed below the projection would inline the token
+    array into the shingle lambda's free variable and re-split the text
+    per lambda element (O(tokens^2) — measured 20x)."""
+    return (df.select(F.col(idc), tokens(text_col).alias("__w"))
+            .filter(F.size("__w") >= n)
+            .select(F.col(idc), word_shingles_on("__w", n).alias("sh")))
 
 
 def _perm_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -84,17 +96,9 @@ class NgramJaccardPairs(PTransform):
 
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
-        # Filter on token count BEFORE shingling: a filter on size(sh)
-        # pushed below the projection would inline the token array into the
-        # shingle lambda's free variable and re-split the text per lambda
-        # element (O(tokens^2) — measured 20x). n_sh is derived from the
-        # persisted frame so sh is never recomputed.
-        sh = (pcoll.df
-              .select(F.col(idc), tokens(self.text_col).alias("__w"))
-              .filter(F.size("__w") >= self.n)
-              .select(F.col(idc), word_shingles_on("__w", self.n).alias("sh")))
-        sh.persist()
-        track_cache(pcoll, sh)
+        sh = self.pin(_shingle_sets(pcoll.df, idc, self.text_col, self.n),
+                      pcoll)
+        # n_sh is derived from the pinned frame so sh is never recomputed
         sh = sh.withColumn("n_sh", F.size("sh"))
         ex = sh.select(idc, "n_sh", F.explode("sh").alias("shingle"))
         a = ex.select(F.col(idc).alias("i"), F.col("n_sh").alias("ni"), "shingle")
@@ -140,13 +144,8 @@ class ContainmentPairs(PTransform):
 
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
-        sh = (pcoll.df
-              .select(F.col(idc), tokens(self.text_col).alias("__w"))
-              .filter(F.size("__w") >= self.n)
-              .select(F.col(idc),
-                      word_shingles_on("__w", self.n).alias("sh")))
-        sh.persist()
-        track_cache(pcoll, sh)
+        sh = self.pin(_shingle_sets(pcoll.df, idc, self.text_col, self.n),
+                      pcoll)
         sh = sh.withColumn("n_sh", F.size("sh"))
         ex = sh.select(idc, "n_sh", F.explode("sh").alias("shingle"))
         a = ex.select(F.col(idc).alias("i"),
@@ -221,15 +220,6 @@ class MinHashLSH(PTransform):
         self.text_col, self.id_col = text_col, id_col
         self.n, self.bands, self.rows = n, bands, rows_per_band
         self.threshold, self.verify = threshold, verify
-        self._persisted: list = []
-
-    def release(self):
-        """Unpersist the shingle/signature/band caches this transform
-        registered (session-lifetime by default; call once the pairs
-        have been consumed or checkpointed)."""
-        for f in self._persisted:
-            f.unpersist()
-        self._persisted = []
 
     def _with_signature(self, sh_df: DataFrame, idc: str) -> DataFrame:
         """Append the num_perm min-hash signature array.
@@ -270,19 +260,11 @@ class MinHashLSH(PTransform):
 
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
-        sh = (pcoll.df
-              .select(F.col(idc), tokens(self.text_col).alias("__w"))
-              .filter(F.size("__w") >= self.n)  # guard BEFORE shingling (lambda
-              # free-var inlining trap — see NgramJaccardPairs comment)
-              .select(F.col(idc), word_shingles_on("__w", self.n).alias("sh")))
-        sh.persist()  # reused for candidate verification below
-        sig = self._with_signature(sh, idc)
-        sig.persist()
-        bands = _band_keys(sig, idc, self.bands, self.rows)
-        bands.persist()  # self-joined below: compute the band expr once
-        for f in (sh, sig, bands):
-            self._persisted.append(f)
-            track_cache(pcoll, f)
+        # sh is reused for candidate verification, bands is self-joined
+        sh = self.pin(_shingle_sets(pcoll.df, idc, self.text_col, self.n),
+                      pcoll)
+        sig = self.pin(self._with_signature(sh, idc), pcoll)
+        bands = self.pin(_band_keys(sig, idc, self.bands, self.rows), pcoll)
         cand = (bands.select(F.col(idc).alias("i"), "bk")
                 .join(bands.select(F.col(idc).alias("j"), "bk"), on="bk")
                 .filter(F.col("i") < F.col("j"))
@@ -378,21 +360,10 @@ class SimHashNearDupPairs(PTransform):
         self.max_distance = max_distance
         self.hash_fn = hash_fn  # see SimHash: 'md5' is the portable form
 
-    _persisted: list | None = None
-
-    def release(self):
-        """Unpersist the cached fingerprint frame."""
-        for f in self._persisted or []:
-            f.unpersist()
-        self._persisted = []
-
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
-        fp = (pcoll | SimHash(self.text_col, self.id_col,
-                              hash_fn=self.hash_fn)).df
-        fp.persist()
-        track_cache(pcoll, fp)
-        self._persisted = (self._persisted or []) + [fp]
+        fp = self.pin((pcoll | SimHash(self.text_col, self.id_col,
+                                       hash_fn=self.hash_fn)).df, pcoll)
         n_chunks = self.max_distance + 1
         width = 64 // n_chunks
         chunks = fp.select(
@@ -817,16 +788,18 @@ class FuzzyDedupKeep(PTransform):
 
     def expand(self, pcoll: PCollection) -> PCollection:
         idc = self.id_col
-        pairs = pcoll | MinHashLSH(
-            text_col=self.text_col, id_col=idc, n=self.n,
-            bands=self.bands, rows_per_band=self.rows_per_band,
-            threshold=self.threshold)
+        mh = MinHashLSH(text_col=self.text_col, id_col=idc, n=self.n,
+                        bands=self.bands, rows_per_band=self.rows_per_band,
+                        threshold=self.threshold)
+        pairs = pcoll | mh
         # CC iterates over the edges; persist so each round doesn't
         # recompute the minhash lineage. CC checkpoints its labels, so
-        # the cache is releasable right after the (eager) loop.
+        # nothing downstream reads the pairs or the MinHash frames once
+        # the (eager) loop is done.
         pairs.df.persist()
         cc = (pairs | ConnectedComponents()).df
         pairs.df.unpersist()
+        mh.release()
         out = (pcoll.df.select(idc)
                .join(cc, on=F.col(idc) == cc["node"], how="left")
                .select(F.col(idc),
@@ -856,12 +829,8 @@ class DedupAgainstCorpus(PTransform):
     corpus is never re-shingled); passing ``corpus`` instead derives
     the index inline.
 
-    Cache lifetime: inline mode persists the shingle/band frames so the
-    first action doesn't recompute the MinHash lineage 2-3x. They stay
-    registered for the session by default (the result is lazy); call
-    ``release()`` once the result is consumed, or construct with
-    ``materialize=True`` to eagerly localCheckpoint the result and
-    release the intermediates before returning.
+    ``materialize=True`` eagerly localCheckpoints the result and
+    releases the pinned shingle/band frames before returning.
     """
 
     def __init__(self, corpus=None, text_col: str = "text",
@@ -880,14 +849,6 @@ class DedupAgainstCorpus(PTransform):
         self.bands, self.rows = bands, rows_per_band
         self.threshold = threshold
         self.index_path, self.materialize = index_path, materialize
-        self._persisted: list = []
-
-    def release(self):
-        """Unpersist every frame this transform cached (inline mode).
-        Safe to call once the result has been consumed / checkpointed."""
-        for f in self._persisted:
-            f.unpersist()
-        self._persisted = []
 
     @classmethod
     def save_index(cls, corpus, path: str, text_col: str = "text",
@@ -943,12 +904,8 @@ class DedupAgainstCorpus(PTransform):
         return cls(index_path=index_path, threshold=threshold,
                    materialize=materialize, label=label, **kw)
 
-    def _prep(self, df, mh, idc):
-        sh = (df.select(F.col(idc), tokens(self.text_col).alias("__w"))
-              .filter(F.size("__w") >= self.n)
-              .select(F.col(idc), word_shingles_on("__w", self.n).alias("sh")))
-        sh.persist()
-        self._persisted.append(sh)
+    def _prep(self, df, mh, idc, pcoll=None):
+        sh = self.pin(_shingle_sets(df, idc, self.text_col, self.n), pcoll)
         bands = _band_keys(mh._with_signature(sh, idc), idc,
                            self.bands, self.rows)
         return sh, bands
@@ -968,13 +925,10 @@ class DedupAgainstCorpus(PTransform):
         mh = MinHashLSH(text_col=self.text_col, id_col=idc, n=self.n,
                         bands=self.bands, rows_per_band=self.rows,
                         threshold=threshold)
-        sh_b, bands_b = self._prep(pcoll.df, mh, idc)
+        sh_b, bands_b = self._prep(pcoll.df, mh, idc, pcoll)
         if not self.index_path:
-            sh_c, bands_c = self._prep(self.corpus, mh, idc)
-        bands_b.persist()
-        self._persisted.append(bands_b)
-        for f in self._persisted:
-            track_cache(pcoll, f)  # pipeline-scoped release path
+            sh_c, bands_c = self._prep(self.corpus, mh, idc, pcoll)
+        bands_b = self.pin(bands_b, pcoll)
 
         def verify(cand, sh_ref):
             left = sh_b.select(F.col(idc).alias("b"), F.col("sh").alias("sh_b"))
@@ -1009,10 +963,9 @@ class DedupAgainstCorpus(PTransform):
                        (F.col("dup_of_corpus").isNotNull()
                         | F.col("dup_of_batch").isNotNull())
                        .cast("int").alias("is_dup")))
-        # Inline mode keeps sh_b/sh_c/bands_b persisted: the result is
-        # LAZY, so the caches materialize during its first action, where
-        # each is read 2-3x (bands + two verifies / cand_cb + cand_bb).
-        # release() or materialize=True hands the lifetime back.
+        # sh_b/sh_c/bands_b stay pinned: the result is LAZY, and its
+        # first action reads each 2-3x (bands + two verifies / cand_cb
+        # + cand_bb)
         if self.materialize:
             out = out.localCheckpoint(eager=True)
             self.release()
@@ -1365,37 +1318,17 @@ class JaccardPrefixJoin(PTransform):
         self.text_col, self.id_col = text_col, id_col
         self.n, self.threshold = int(n), float(threshold)
         self.order = order
-        self._persisted: list = []
-
-    def release(self):
-        """Unpersist the shingle cache (session-lifetime by default;
-        call once the pairs are consumed or checkpointed)."""
-        for f in self._persisted:
-            f.unpersist()
-        self._persisted = []
 
     def expand(self, pcoll: PCollection) -> PCollection:
         from pyspark.sql import Window
 
         idc, t = self.id_col, self.threshold
-        # Pre-project the token array, THEN shingle over it (the
-        # word_shingles_on pattern every other dedup operator uses):
-        # shingling the raw text column re-splits the whole text once
-        # per lambda element inside the higher-order transform —
-        # measured 19.8s -> 1.3s for the sf0.1 shingle materialization.
-        # tokens >= n  <=>  size(sh) > 0, so the filter is unchanged.
-        sh = (pcoll.df
-              .select(F.col(idc).alias("id"),
-                      tokens(self.text_col).alias("__w"))
-              .filter(F.size("__w") >= self.n)
-              .select("id", word_shingles_on("__w", self.n).alias("sh"))
-              .withColumn("s", F.size("sh")))
-        # sh feeds the prefix AND both verify sides: without a persist
-        # the shingle transform (the dominant expression cost) runs
-        # 3x — measured 5x end-to-end slowdown at sf0.1
-        sh.persist()
-        self._persisted.append(sh)
-        track_cache(pcoll, sh)
+        # sh feeds the prefix AND both verify sides: unpinned, the
+        # shingle transform (the dominant expression cost) runs 3x —
+        # measured 5x end-to-end slowdown at sf0.1
+        sh = self.pin(_shingle_sets(pcoll.df, idc, self.text_col, self.n)
+                      .withColumnRenamed(idc, "id")
+                      .withColumn("s", F.size("sh")), pcoll)
         plen = (F.col("s")
                 - F.floor(F.lit(t) * F.col("s")).cast("int") + 1)
         if self.order == "lex":

@@ -697,8 +697,9 @@ class Hits(PTransform):
 
     Scale: per round, TWO node-keyed joins of the score table
     (nodes-sized) against the edge list + one dst-keyed and one
-    src-keyed aggregation; the normalizer is a 1-row broadcast. Each
-    half-step localCheckpoints so the plan stays one round deep.
+    src-keyed aggregation; the normalizer is a 1-row broadcast. Rounds
+    run through ``_fixed_point`` on one (node, h, a) state frame, so the
+    plan stays one round deep.
 
     Output: (node, hub, authority), each rounded 9 (per-group float
     sum order is the only cross-engine difference; round 9 absorbs it
@@ -726,32 +727,28 @@ class Hits(PTransform):
         n_nodes = nodes.count()
         if n_nodes == 0:
             raise ValueError("Hits: empty edge list")
-        hub = nodes.withColumn("h", F.lit(1.0 / n_nodes))
-        auth = None
-        for _ in range(self.iterations):
-            araw = (edges.join(hub, edges["src"] == hub["node"])
-                    .groupBy("dst").agg(F.sum("h").alias("__a")))
-            anorm = araw.agg(F.sum("__a").alias("__s"))
-            auth = (nodes
-                    .join(araw, nodes["node"] == araw["dst"], "left")
-                    .crossJoin(F.broadcast(anorm))
+
+        def half_step(scores, score, key, other, out):
+            # L1-normalized sum of ``score`` over the edges' ``key`` end,
+            # landed on their ``other`` end
+            raw = (edges.join(scores, edges[key] == scores["node"])
+                   .groupBy(other).agg(F.sum(score).alias("__r")))
+            norm = raw.agg(F.sum("__r").alias("__s"))
+            return (nodes
+                    .join(raw, nodes["node"] == raw[other], "left")
+                    .crossJoin(F.broadcast(norm))
                     .select(nodes["node"],
-                            (F.coalesce(F.col("__a"), F.lit(0.0))
-                             / F.col("__s")).alias("a"))
-                    .localCheckpoint(eager=False))
-            hraw = (edges.join(auth, edges["dst"] == auth["node"])
-                    .groupBy("src").agg(F.sum("a").alias("__h")))
-            hnorm = hraw.agg(F.sum("__h").alias("__s"))
-            hub = (nodes
-                   .join(hraw, nodes["node"] == hraw["src"], "left")
-                   .crossJoin(F.broadcast(hnorm))
-                   .select(nodes["node"],
-                           (F.coalesce(F.col("__h"), F.lit(0.0))
-                            / F.col("__s")).alias("h"))
-                   .localCheckpoint(eager=True))
-        out = (hub.join(auth, on="node")
-               .select("node", F.round("h", 9).alias("hub"),
-                       F.round("a", 9).alias("authority")))
+                            (F.coalesce(F.col("__r"), F.lit(0.0))
+                             / F.col("__s")).alias(out)))
+
+        def step(state):
+            auth = half_step(state, "h", "src", "dst", "a")
+            return half_step(auth, "a", "dst", "src", "h").join(auth, "node")
+
+        start = nodes.withColumn("h", F.lit(1.0 / n_nodes))
+        state, _, _ = _fixed_point(start, step, self.iterations)
+        out = state.select("node", F.round("h", 9).alias("hub"),
+                           F.round("a", 9).alias("authority"))
         return pcoll.with_df(out)
 
 

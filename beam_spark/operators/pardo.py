@@ -180,7 +180,7 @@ class ParDo(PTransform):
         if not multi:
             return pcoll.with_df(out_df)
 
-        out_df.persist()
+        self.pin(out_df, pcoll)
         main = pcoll.with_df(
             out_df.filter(F.col("__tag") == MAIN_TAG).drop("__tag", "__error"))
         if self._dlq and not self._tags:

@@ -419,14 +419,6 @@ class SemDeDup(PTransform):
         self.id_col, self.vec_col = id_col, vec_col
         self.lloyd_iters, self.fit_sample = lloyd_iters, fit_sample
         self.max_cluster_rows = max_cluster_rows
-        self._persisted: list = []
-
-    def release(self):
-        """Unpersist the cached cluster assignment (registered when the
-        hot-cluster guard runs); call once the result is consumed."""
-        for f in self._persisted:
-            f.unpersist()
-        self._persisted = []
 
     def _centroids(self, df, k):
         """(sids, matrix): seed ids + row-normalized float64 centroids."""
@@ -479,13 +471,11 @@ class SemDeDup(PTransform):
                     .withColumn("nrm", norm(F.col("vec"))))
 
         if self.max_cluster_rows is not None:
-            # the guard is an EAGER aggregation; persist the assignment
-            # so the guard scan, and the pair join that follows, reuse
-            # one computation of the K-way dot-product argmax instead of
-            # re-running it per consumer (release() hands the lifetime
-            # back; default is the MinHashLSH session posture)
-            assigned = assigned.persist()
-            self._persisted.append(assigned)
+            # the guard is an EAGER aggregation; pin the assignment so
+            # the guard scan, and the pair join that follows, reuse one
+            # computation of the K-way dot-product argmax instead of
+            # re-running it per consumer
+            assigned = self.pin(assigned, pcoll)
             hot = (assigned.groupBy("cluster_id")
                    .agg(F.count(F.lit(1)).alias("n"))
                    .agg(F.max("n"), F.sum("n")).collect()[0])
@@ -551,14 +541,6 @@ class IvfCosineTopK(PTransform):
         self.fit_sample, self.lloyd_iters = fit_sample, lloyd_iters
         self.exclude_self = exclude_self
         self.max_list_rows = max_list_rows
-        self._persisted: list = []
-
-    def release(self):
-        """Unpersist the cached list assignment (registered when the
-        hot-list guard runs)."""
-        for f in self._persisted:
-            f.unpersist()
-        self._persisted = []
 
     def _fit_centroids(self, df):
         import numpy as np
@@ -603,8 +585,7 @@ class IvfCosineTopK(PTransform):
             assign_gen, schema=f"{idc} long, {vc} array<double>, list_id int")
 
         if self.max_list_rows is not None:
-            corpus = corpus.persist()
-            self._persisted.append(corpus)
+            corpus = self.pin(corpus, pcoll)
             hot = (corpus.groupBy("list_id")
                    .agg(F.count(F.lit(1)).alias("n"))
                    .agg(F.max("n"), F.sum("n")).collect()[0])

@@ -14,6 +14,17 @@ re-expressed on Spark:
   __ror__), and ``"Label" >> transform`` attaches a name.
 * the Pipeline is just the SparkSession + lineage — Spark's logical plan IS
   the pipeline DAG, so there is no separate proto/graph layer.
+
+Pin policy (Beam's Spark runner caches Datasets that fan out, SURVEY
+§4.3; Spark only caches what it is asked to): a transform that reads a
+frame more than once AFTER ``expand`` returns — its result is lazy, so
+the reads happen at the caller's first action — pins it with
+``PTransform.pin``. The frame is persisted, recorded on the transform
+and registered with the input's pipeline, and is released by whichever
+comes first: ``transform.release()``, or ``Pipeline.release_caches()``
+(which also runs on exit from a ``with Pipeline()`` block). A frame
+read more than once only INSIDE ``expand`` is persisted and
+unpersisted there, and never pinned.
 """
 
 from __future__ import annotations
@@ -41,18 +52,11 @@ class Pipeline:
 
             spark = get_spark()
         self.spark = spark
-        #: frames persisted by transforms applied under this pipeline
-        #: (MinHashLSH/JaccardPrefixJoin/... caches) — released in one
-        #: shot by release_caches() / context-manager exit, so callers
-        #: need not track each transform's release() individually
+        #: frames pinned by transforms applied under this pipeline
         self._persisted: list = []
 
-    def register_cache(self, frame) -> None:
-        """Track a persisted DataFrame for pipeline-scoped release."""
-        self._persisted.append(frame)
-
     def release_caches(self) -> None:
-        """Unpersist every frame transforms cached under this pipeline.
+        """Unpersist every frame transforms pinned under this pipeline.
         Call once results are materialized (unpersist is a no-op on
         already-released frames, so double-release is safe)."""
         for f in self._persisted:
@@ -169,6 +173,26 @@ class PTransform:
 
     def __init__(self, label: str | None = None):
         self.label = label or type(self).__name__
+        #: frames this transform pinned (see the module's pin policy)
+        self._persisted: list = []
+
+    def pin(self, frame: DataFrame,
+            pcoll: PCollection | None = None) -> DataFrame:
+        """Persist ``frame``, a frame the lazy result reads more than
+        once, and own it until ``release()``; with ``pcoll``, also
+        register it with ``pcoll``'s pipeline, if it has one."""
+        frame.persist()
+        self._persisted.append(frame)
+        if pcoll is not None and pcoll.pipeline is not None:
+            pcoll.pipeline._persisted.append(frame)
+        return frame
+
+    def release(self) -> None:
+        """Unpersist every frame this transform pinned. Call once its
+        result is consumed or checkpointed."""
+        for f in self._persisted:
+            f.unpersist()
+        self._persisted = []
 
     def expand(self, pcoll: PCollection | PBegin) -> Any:
         raise NotImplementedError
@@ -212,10 +236,3 @@ def as_pcollection(obj: PCollection | DataFrame, pipeline: Pipeline | None = Non
         return obj
     return PCollection(obj, pipeline=pipeline)
 
-
-def track_cache(pcoll: PCollection, frame) -> None:
-    """Register a frame a transform just persisted with the owning
-    pipeline's cache registry (no-op for pipeline-less PCollections) —
-    the pipeline-scoped complement to each transform's release()."""
-    if pcoll.pipeline is not None:
-        pcoll.pipeline.register_cache(frame)

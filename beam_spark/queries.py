@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from beam_spark.pcollection import PCollection
-from beam_spark.operators.core import Filter, Select
+from beam_spark.operators.core import Filter, Select, fan_out
 from beam_spark.operators.group import CombinePerKey
 
 # registry: name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
@@ -92,24 +92,6 @@ def dsum(expr: str, alias: str) -> str:
 def davg(expr: str, alias: str, count_col: str = "*") -> str:
     """Deterministic double mean: exact decimal sum / exact count."""
     return f"CAST(SUM({expr}) AS DOUBLE) / COUNT({count_col}) AS {alias}"
-
-
-def fan_out(df, spark: SparkSession):
-    """Scale-adaptive read fan-out for expression-heavy zero-shuffle
-    pipelines (optimization guide §2.5, "input skew: one huge
-    unsplittable file ... repartition immediately after the read"):
-    the testdata tables are single-row-group parquet files, so every
-    scan is exactly ONE task at any core count and a per-row
-    expression chain runs single-threaded no matter how many cores
-    the session has. Round-robin repartition to the session's default
-    parallelism ONLY when the scan is under-parallel — on a real
-    multi-file table (scan partitions >= parallelism) this is a no-op,
-    so nothing extra is shuffled at scale, and the fan-out width
-    follows the core count the driver runs the bench at."""
-    p = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
 
 
 def build_members(thunks):
@@ -1111,7 +1093,7 @@ def q_text_luhn_card_validation(spark, sf_dir):
     orders = fan_out(orders.selectExpr(
         "*",
         "concat(substr(pan, 1, 4), ' ', substr(pan, 5, 4), '-', "
-        "substr(pan, 9, 4), ' ', substr(pan, 13, 4)) AS pan_fmt"), spark)
+        "substr(pan, 9, 4), ' ', substr(pan, 13, 4)) AS pan_fmt"))
     out = (PCollection(orders)
            | LuhnValidate("pan")
            | LuhnValidate("pan_fmt")
@@ -1194,7 +1176,7 @@ def q_text_iban_validation(spark, sf_dir):
         "concat(substr(iban, 1, length(iban) - 1), "
         "CAST((CAST(substr(iban, length(iban), 1) AS BIGINT) + 1) "
         "% 10 AS STRING)) AS corrupt",
-        "substr(iban, 1, 10) AS malformed"), spark)
+        "substr(iban, 1, 10) AS malformed"))
     out = (PCollection(cust)
            | IbanValidate("iban")
            | IbanValidate("corrupt")
@@ -7799,7 +7781,7 @@ def q_pardo_json(spark, sf_dir):
     # fan_out: the Python json.loads bundle otherwise runs on the
     # scan's single task (single-row-group input); per-row pure
     ev = table(spark, sf_dir, "events")
-    out = (ev.with_df(fan_out(ev.df, spark))
+    out = (ev.with_df(fan_out(ev.df))
            | ParDo(ExtractProps(),
                    output_schema="event_id: long, k: long, event_type: string"))
     return out.df

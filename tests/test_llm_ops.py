@@ -1546,19 +1546,28 @@ def test_jaccard_prefix_join_equals_quadratic(spark):
 
 
 def test_pipeline_scoped_cache_release(spark):
-    """Persisting transforms (JaccardPrefixJoin, MinHashLSH, ...)
-    register their caches with the owning Pipeline: release_caches()
-    (or exiting the `with Pipeline()` block) unpersists everything in
-    one shot — repeated use in yaml pipelines / sweeps no longer
-    accumulates executor storage without each caller knowing to call
-    the per-transform release()."""
-    from beam_spark.operators.dedupe import JaccardPrefixJoin, MinHashLSH
+    """Every transform that pins a frame (PTransform.pin) releases it
+    on both paths: exiting the `with Pipeline()` block (or
+    release_caches()) unpersists everything transforms pinned under
+    the pipeline in one shot, and a pipeline-less transform's
+    release() unpersists what it pinned. FuzzyDedupKeep releases its
+    inner MinHashLSH itself, keeping only CC's two checkpoints."""
+    from beam_spark.operators.core import Partition, Tee
+    from beam_spark.operators.dedupe import (
+        ContainmentPairs, DedupAgainstCorpus, FuzzyDedupKeep,
+        JaccardPrefixJoin, MinHashLSH, NgramJaccardPairs,
+        SimHashNearDupPairs)
+    from beam_spark.operators.pardo import ParDo
+    from beam_spark.operators.similarity import IvfCosineTopK, SemDeDup
     from beam_spark.pcollection import PCollection, Pipeline
 
     df = spark.createDataFrame(
         [(0, "alpha bravo charlie delta echo"),
          (1, "alpha bravo charlie delta foxtrot")],
         "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(4)],
+        "vec_id long, embedding array<double>")
     with Pipeline(spark) as p:
         pc = PCollection(df, pipeline=p)
         (pc | JaccardPrefixJoin(threshold=0.5)).df.collect()
@@ -1576,6 +1585,47 @@ def test_pipeline_scoped_cache_release(spark):
     assert op._persisted and op._persisted[0].storageLevel.useMemory
     op.release()
     assert not op._persisted
+
+    def outputs(out):
+        if isinstance(out, dict):
+            out = list(out.values())
+        return out if isinstance(out, (list, tuple)) else [out]
+
+    cases = [
+        (lambda: NgramJaccardPairs(threshold=0.5), df),
+        (lambda: ContainmentPairs(threshold=0.5), df),
+        (lambda: MinHashLSH(threshold=0.5), df),
+        (lambda: SimHashNearDupPairs(), df),
+        (lambda: DedupAgainstCorpus(df), df),
+        (lambda: JaccardPrefixJoin(threshold=0.5, order="df"), df),
+        (lambda: SemDeDup(n_clusters=2), vecs),
+        (lambda: IvfCosineTopK(vecs, k=1, n_lists=2, nprobe=1,
+                               max_list_rows=4), vecs),
+        (lambda: Partition("doc_id % 2", 2), df),
+        (lambda: Tee(lambda pc: pc.df.count()), df.select("*")),
+        (lambda: ParDo(lambda r: [r], "doc_id: long, text: string")
+         .with_exception_handling(), df),
+    ]
+    for make, frame in cases:
+        for scoped in (False, True):
+            op = make()
+            with Pipeline(spark) as p:
+                pc = PCollection(frame, pipeline=p if scoped else None)
+                for o in outputs(pc | op):
+                    o.df.collect()
+                pinned = list(op._persisted)
+                assert pinned, op
+                assert all(f.storageLevel.useMemory for f in pinned), op
+                if not scoped:
+                    op.release()
+                    assert not op._persisted
+            assert all(not f.storageLevel.useMemory for f in pinned), op
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    (PCollection(df) | FuzzyDedupKeep(threshold=0.5)).df.collect()
+    kept = len(set(jsc.getPersistentRDDs().keySet()) - before)
+    assert kept <= 2, kept              # CC seed + labels, no MinHash
 
 
 def test_shortest_paths_semantics(spark):
@@ -1641,9 +1691,10 @@ def test_fixed_point_loop_rules(spark):
     budget (ShortestPaths(iterations=3) relaxes three times, not
     four); and superseded rounds are released, lazy or eager —
     PageRank(iterations=10) keeps its four setup frames plus one round
-    cached, not 14. The unconverged warn/raise paths are covered by
+    cached, not 14, and Hits(iterations=10) its two plus one, not 22.
+    The unconverged warn/raise paths are covered by
     test_connected_components_large_ids_and_nonconvergence."""
-    from beam_spark.operators.graph import (PageRank, ShortestPaths,
+    from beam_spark.operators.graph import (Hits, PageRank, ShortestPaths,
                                             _fixed_point)
 
     chain = spark.createDataFrame([(k, k + 1) for k in range(4)],
@@ -1680,6 +1731,10 @@ def test_fixed_point_loop_rules(spark):
     _, kept = cached_by(lambda: (PCollection(chain) | pr).df.collect())
     assert pr.rounds_run_ == 10
     assert kept <= 4 + 1, kept          # edges/nodes/deg/rv + one round
+
+    _, kept = cached_by(
+        lambda: (PCollection(chain) | Hits(iterations=10)).df.collect())
+    assert kept <= 2 + 1, kept          # edges/nodes + one round
 
 
 def test_record_linkage_score(spark):

@@ -3,7 +3,11 @@
 
 For each gate or component: time the registry call (driver-side plan
 construction + eager member training) separately from the noop-sink
-execution, and count the Spark jobs each pass runs (build + execute).
+execution, and count the Spark jobs each pass runs (build + execute)
+and the cached frames (persistent RDDs) the session holds after it: a
+pin that leaks grows pass by pass, one reused across passes stays
+level above zero. The cached count is session-wide, so profile one
+name to read its own.
 High build_s = Catalyst/py4j/eager-training bound (guide §7.3 driver
 work); high exec_s = executor bound. Median of N passes, untimed warmup
 pass first.
@@ -40,6 +44,7 @@ def main() -> None:
     spark = get_spark("beam_spark-profile")
     spark.sparkContext.setLogLevel("ERROR")
     tracker = spark.sparkContext.statusTracker()
+    jsc = spark.sparkContext._jsc
 
     gates = g.queries()
     registry = {**q.queries(), **gates}
@@ -59,6 +64,7 @@ def main() -> None:
     build: dict[str, list[float]] = {n: [] for n in names}
     execu: dict[str, list[float]] = {n: [] for n in names}
     jobs: dict[str, list[int]] = {n: [] for n in names}
+    cached: dict[str, list[int]] = {n: [] for n in names}
     for r in range(n_runs):
         for name in names:
             j0 = last_job()
@@ -71,6 +77,7 @@ def main() -> None:
             execu[name].append(t2 - t1)
             jobs[name].append(sum(1 for j in tracker.getJobIdsForGroup(None)
                                   if j > j0))
+            cached[name].append(jsc.getPersistentRDDs().size())
         print(f"[profile] pass {r + 1}/{n_runs} done", file=sys.stderr)
 
     rows = []
@@ -78,12 +85,15 @@ def main() -> None:
         b, e = median(build[n]), median(execu[n])
         rows.append((b + e, n, b, e))
     rows.sort(reverse=True)
-    print(f"{'total':>7} {'build':>7} {'exec':>7} {'jobs':>5}  name")
+    print(f"{'total':>7} {'build':>7} {'exec':>7} {'jobs':>5} "
+          f"{'cached/pass':>11}  name")
     for tot, n, b, e in rows:
-        print(f"{tot:7.2f} {b:7.2f} {e:7.2f} {median(jobs[n]):5g}  {n}")
+        per_pass = ",".join(map(str, cached[n]))
+        print(f"{tot:7.2f} {b:7.2f} {e:7.2f} {median(jobs[n]):5g} "
+              f"{per_pass:>11}  {n}")
     print(json.dumps({n: {"build": round(median(build[n]), 3),
                           "exec": round(median(execu[n]), 3),
-                          "jobs": jobs[n]}
+                          "jobs": jobs[n], "cached": cached[n]}
                       for n in names}))
     spark.stop()
 
