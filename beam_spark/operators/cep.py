@@ -93,10 +93,11 @@ ALL_ROWS_PER_MATCH = "all"
 
 
 class Define:
-    """Symbol predicate: a row-level callable and/or a vectorized mask.
+    """Symbol predicate as a vectorized mask: ``mask_fn(pdf) -> bool
+    array`` takes the sorted frame and returns one bit per row. (A plain
+    row callable in ``defines`` is the other predicate form; see
+    :class:`MatchRecognize`.)
 
-    ``mask_fn(pdf) -> bool array`` is the fast path (whole-column numpy);
-    ``row_fn(row_dict) -> bool`` is the fallback. Either may be None.
     ``frontier_sensitive`` marks predicates whose mask reads FORWARD
     neighbor rows (NEXT shifts): their value at the last buffered row
     can change when more data arrives, so the streaming matcher must
@@ -115,17 +116,12 @@ class Define:
     simply evaluate as matching.
     """
 
-    __slots__ = ("row_fn", "mask_fn", "frontier_sensitive", "ctx_fn",
-                 "prev_depth")
+    __slots__ = ("mask_fn", "frontier_sensitive", "ctx_fn", "prev_depth")
 
-    def __init__(self, row_fn: Callable | None = None,
-                 mask_fn: Callable | None = None,
+    def __init__(self, mask_fn: Callable, *,
                  frontier_sensitive: bool = False,
                  ctx_fn: Callable | None = None,
                  prev_depth: int = 0):
-        if row_fn is None and mask_fn is None:
-            raise ValueError("Define needs row_fn or mask_fn")
-        self.row_fn = row_fn
         self.mask_fn = mask_fn
         self.frontier_sensitive = frontier_sensitive
         self.ctx_fn = ctx_fn
@@ -136,10 +132,7 @@ class Define:
         self.prev_depth = int(prev_depth)
 
 
-def vectorized(mask_fn: Callable, row_fn: Callable | None = None,
-               frontier_sensitive: bool = False,
-               ctx_fn: Callable | None = None,
-               prev_depth: int = 0) -> Define:
+def vectorized(mask_fn: Callable, **options) -> Define:
     """Vectorized symbol predicate: ``mask_fn`` takes the group's sorted
     pandas DataFrame and returns a boolean array (one bit per row). If
     the mask reads FORWARD neighbor rows (``shift(-k)``), set
@@ -148,9 +141,7 @@ def vectorized(mask_fn: Callable, row_fn: Callable | None = None,
     shift in ``prev_depth`` instead and it stays streaming-safe.
     ``ctx_fn(cols, pos, acc)`` adds a match-state condition (see
     :class:`Define`)."""
-    return Define(row_fn=row_fn, mask_fn=mask_fn,
-                  frontier_sensitive=frontier_sensitive, ctx_fn=ctx_fn,
-                  prev_depth=prev_depth)
+    return Define(mask_fn, **options)
 
 
 def _is_quantifier(q) -> bool:
@@ -466,6 +457,162 @@ def _match_at(masks: Mapping, n_rows: int, start: int,
     return rec(start, 0, [])
 
 
+def _ts_ms(s):
+    """Event times of a datetime64 series as int64 UTC milliseconds,
+    whatever the series' unit (``pd.Timestamp(v).value // 10**6`` per
+    row, vectorized); a tz-aware series normalizes to UTC first."""
+    import numpy as np
+
+    if getattr(s.dtype, "tz", None) is not None:
+        s = s.dt.tz_convert("UTC").dt.tz_localize(None)
+    return s.to_numpy().astype("datetime64[ms]").astype(np.int64)
+
+
+def _require_timestamp(df, col: str, what: str) -> None:
+    """Plan-time check that ``col`` is a timestamp: a numeric column
+    would silently use the wrong unit for WITHIN and maturity."""
+    dt = df.schema[col].dataType
+    if not isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        raise TypeError(f"{what} needs a timestamp column ({col} is "
+                        f"{dt.simpleString()})")
+
+
+def _encode_state(held, match_no: int, shift_ctx) -> bytes:
+    """One streaming state record per key: ``{"cols": held rows, "mn":
+    matches emitted so far, "ctx": PREV shift context}``. Each frame
+    crosses the state boundary as pickled {column -> numpy array} (None
+    when empty): numeric and datetime columns serialize as raw buffers,
+    so encode/decode cost is O(columns), not O(rows) — the
+    coder-encoded-state discipline of trigger_manager.py:123."""
+    import pickle
+
+    def cols(df):
+        if df is None or not len(df):
+            return None
+        return {c: df[c].to_numpy() for c in df.columns}
+
+    return pickle.dumps({"cols": cols(held), "mn": match_no,
+                         "ctx": cols(shift_ctx)})
+
+
+def _decode_state(blob):
+    """-> (held rows, match number, shift context); frames are None when
+    empty. Any other record shape raises rather than being misread."""
+    import pickle
+
+    import pandas as pd
+
+    saved = pickle.loads(bytes(blob))
+    if not isinstance(saved, dict) or set(saved) != {"cols", "mn", "ctx"}:
+        raise ValueError(
+            "MatchRecognize: the streaming state record is not the "
+            "columnar {cols, mn, ctx} record (a checkpoint from an older "
+            "build?) — restart the query from a new checkpoint")
+
+    def frame(cols):
+        return None if cols is None else pd.DataFrame(cols)
+
+    return frame(saved["cols"]), saved["mn"], frame(saved["ctx"])
+
+
+class _MatchCore:
+    """What batch and streaming MATCH_RECOGNIZE share: how a DEFINE
+    becomes a mask over a sorted frame, how match-state (ctx)
+    predicates bind to its columns, and how a found match becomes
+    output rows. Both paths run ``_match_at`` over these masks and emit
+    through ``emit``, so a stream returns what the batch query returns;
+    each path keeps only where a match may start and end."""
+
+    def __init__(self, mr: "MatchRecognize"):
+        self.defines, self.measures = mr.defines, mr.measures
+        self.after_match = mr.after_match
+        self.all_rows = mr.rows_per_match == ALL_ROWS_PER_MATCH
+        self.running = self.all_rows and mr.measure_semantics == "running"
+        self.excluded, self.unalias = mr.exclude_symbols, mr.symbol_aliases
+        self.ctx_fns = {sym: d.ctx_fn for sym, d in mr.defines.items()
+                        if isinstance(d, Define) and d.ctx_fn is not None}
+        schema = mr.output_schema
+        if isinstance(schema, str):
+            schema = T._parse_datatype_string(schema)
+        if self.all_rows and "__classifier" not in schema.fieldNames():
+            schema = (schema
+                      .add("__classifier", T.StringType())
+                      .add("__match_number", T.LongType()))
+        self.schema = schema
+        self.out_cols = schema.fieldNames()
+
+    def masks(self, pdf) -> dict:
+        """symbol -> bool array over the rows of ``pdf``: a Define's
+        mask, or a plain row callable over row dicts (built once, and
+        only when such a callable exists)."""
+        import numpy as np
+
+        records, out = None, {}
+        for sym, d in self.defines.items():
+            if isinstance(d, Define):
+                out[sym] = np.asarray(d.mask_fn(pdf)).astype(bool)
+                continue
+            if records is None:
+                records = pdf.to_dict(orient="records")
+            out[sym] = np.fromiter((bool(d(r)) for r in records),
+                                   dtype=bool, count=len(pdf))
+        return out
+
+    def ctx(self, cols: Mapping, n_real: int):
+        """The match-state predicates bound to ``cols`` (column ->
+        array over the matched frame), as ``_match_at`` calls them:
+        symbol -> ``fn(pos, acc)``, with ``acc`` un-aliased so a
+        FIRST/LAST reference sees original names. None if no DEFINE
+        has one. Positions at or past ``n_real`` are the streaming
+        phantoms and match (ctx only reads rows inside the match)."""
+        if not self.ctx_fns:
+            return None
+        unalias = self.unalias
+
+        def bind(f):
+            def ok(pos, acc):
+                if pos >= n_real:
+                    return True
+                return f(cols, pos, [(unalias.get(s, s), i) for s, i in acc]
+                         if unalias else acc)
+            return ok
+
+        return {sym: bind(f) for sym, f in self.ctx_fns.items()}
+
+    def emit(self, m: list, start: int, cols: Mapping, key: dict,
+             match_no: int, out: list) -> int:
+        """Append the output rows of match ``m`` ((symbol, row) pairs
+        found at ``start`` over ``cols``) to ``out``; return the row
+        where matching resumes (AFTER MATCH SKIP). ``key`` holds the
+        partition values ONE ROW PER MATCH carries; ``match_no`` is the
+        match's 1-based number within its partition. Only the matched
+        rows become dicts."""
+        # suppression is POSITIONAL: mark the excluded occurrences'
+        # rows BEFORE un-aliasing, then give measures / skip /
+        # classifier the original names
+        excl_rows = {idx for sym, idx in m if sym in self.excluded}
+        if self.unalias:
+            m = [(self.unalias.get(sym, sym), idx) for sym, idx in m]
+        match_rows = [(sym, {c: v[idx] for c, v in cols.items()})
+                      for sym, idx in m]
+        measures = self.measures
+        meas = {name: fn(match_rows) for name, fn in measures.items()}
+        if not self.all_rows:
+            out.append({**key, **meas})
+        else:
+            for ridx, (sym, r) in enumerate(match_rows):
+                if m[ridx][1] in excl_rows:
+                    continue
+                meas_r = (meas if not self.running else
+                          {name: (meas[name]
+                                  if getattr(fn, "final_semantics", False)
+                                  else fn(match_rows[:ridx + 1]))
+                           for name, fn in measures.items()})
+                out.append({**r, **meas_r, "__classifier": sym,
+                            "__match_number": match_no})
+        return _next_start(self.after_match, m, start)
+
+
 class MatchRecognize(PTransform):
     """Row-pattern matching per key (BeamMatchRel semantics).
 
@@ -490,8 +637,7 @@ class MatchRecognize(PTransform):
         or ALL_ROWS_PER_MATCH — one output row per MATCHED INPUT ROW,
         carrying that row's columns, the row's pattern variable
         (``__classifier``), the 1-based ``__match_number``, and the
-        measures evaluated over the whole match (FINAL semantics —
-        RUNNING measures are a documented divergence).
+        measures (FINAL or RUNNING, see ``measure_semantics``).
     """
 
     def __init__(self, partition_by, order_by,
@@ -532,24 +678,24 @@ class MatchRecognize(PTransform):
         bytes but the key cardinality is unbounded; set a duration
         ("1 hour") to expire idle keys' counters, accepting that a key
         silent for longer restarts numbering."""
+        from beam_spark.streaming.core import _parse_delay
+
         super().__init__(label)
+        if rows_per_match not in (ONE_ROW_PER_MATCH, ALL_ROWS_PER_MATCH):
+            raise ValueError(
+                f"rows_per_match must be ONE_ROW_PER_MATCH or "
+                f"ALL_ROWS_PER_MATCH, not {rows_per_match!r}")
         self.rows_per_match = rows_per_match
         if measure_semantics not in ("final", "running"):
             raise ValueError(measure_semantics)
         self.measure_semantics = measure_semantics
-        if within is not None:
-            from beam_spark.streaming.core import _parse_delay
 
-            self.within_ms = int(_parse_delay(within).total_seconds() * 1000)
-        else:
-            self.within_ms = None
-        if drain_state_ttl is not None:
-            from beam_spark.streaming.core import _parse_delay
+        def ms(delay):
+            return (None if delay is None
+                    else int(_parse_delay(delay).total_seconds() * 1000))
 
-            self.drain_ttl_ms = int(
-                _parse_delay(drain_state_ttl).total_seconds() * 1000)
-        else:
-            self.drain_ttl_ms = None
+        self.within_ms = ms(within)
+        self.drain_ttl_ms = ms(drain_state_ttl)
         self.partition_by = ([partition_by] if isinstance(partition_by, str)
                              else list(partition_by))
         self.order_by = [order_by] if isinstance(order_by, str) else list(order_by)
@@ -591,6 +737,15 @@ class MatchRecognize(PTransform):
         missing = needed - set(self.defines)
         if missing:
             raise ValueError(f"pattern symbols without DEFINE: {sorted(missing)}")
+        if after_match not in (SKIP_PAST_LAST_ROW, SKIP_TO_NEXT_ROW) and not (
+                isinstance(after_match, tuple) and len(after_match) == 2
+                and after_match[0] in ("to_first", "to_last")
+                and after_match[1] in {self.symbol_aliases.get(s, s)
+                                       for s in needed}):
+            raise ValueError(
+                f"after_match must be SKIP_PAST_LAST_ROW, SKIP_TO_NEXT_ROW, "
+                f"or skip_to_first/skip_to_last of a pattern symbol, not "
+                f"{after_match!r}")
 
     def expand(self, pcoll: PCollection) -> PCollection:
         import numpy as np
@@ -604,25 +759,13 @@ class MatchRecognize(PTransform):
                     "unbounded input until drain")
             return self._expand_streaming(pcoll)
 
+        core = _MatchCore(self)
         anchor_start, anchor_end = self.anchor_start, self.anchor_end
-        keys = self.partition_by
-        order_by = self.order_by
-        pattern, defines = self.pattern, self.defines
-        measures, after_match = self.measures, self.after_match
-        all_rows = self.rows_per_match == ALL_ROWS_PER_MATCH
-        running = all_rows and self.measure_semantics == "running"
-        excluded = self.exclude_symbols
-        unalias = self.symbol_aliases
+        keys, order_by, pattern = self.partition_by, self.order_by, self.pattern
         within_ms = self.within_ms
-        drain_ttl_ms = self.drain_ttl_ms
-        schema = self.output_schema
-        if isinstance(schema, str):
-            schema = T._parse_datatype_string(schema)
-        if all_rows and "__classifier" not in schema.fieldNames():
-            schema = (schema
-                      .add("__classifier", T.StringType())
-                      .add("__match_number", T.LongType()))
-        out_cols = [f.name for f in schema.fields]
+        if within_ms is not None:
+            _require_timestamp(pcoll.df, order_by[0],
+                               "WITHIN (the first order_by column)")
 
         # Superset of feasible match starts: union of the alternative
         # masks of every leading item up to and including the first
@@ -657,48 +800,15 @@ class MatchRecognize(PTransform):
             n = len(pdf)
             if n == 0:
                 return
-
-            records = None  # row dicts, built only if needed
-
-            def get_records():
-                nonlocal records
-                if records is None:
-                    records = pdf.to_dict(orient="records")
-                return records
-
-            masks = {}
-            for sym, d in defines.items():
-                mask_fn = d.mask_fn if isinstance(d, Define) else None
-                if mask_fn is not None:
-                    masks[sym] = np.asarray(mask_fn(pdf)).astype(bool)
-                else:
-                    fn = d.row_fn if isinstance(d, Define) else d
-                    rs = get_records()
-                    masks[sym] = np.fromiter(
-                        (bool(fn(r)) for r in rs), dtype=bool, count=n)
-
+            masks = core.masks(pdf)
             lead_all = np.zeros(n, dtype=bool)
             for alts in lead_items:
                 for s in alts:
                     lead_all |= masks[s]
-
-            # Lazy row construction for measures: only rows inside a
-            # match are ever converted to dicts on the vectorized path.
             cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-            ctx_syms = frozenset(
-                sym for sym, d in defines.items()
-                if isinstance(d, Define) and d.ctx_fn is not None)
-            fast_all = _make_fast_runs(masks, ctx_syms)
-
+            fast_all = _make_fast_runs(masks, frozenset(core.ctx_fns))
             if within_ms is not None:
-                ts_dtype = pdf[order_by[0]].dtype
-                if not str(ts_dtype).startswith("datetime64"):
-                    raise TypeError(
-                        f"WITHIN needs a timestamp first order_by column"
-                        f" ({order_by[0]} is {ts_dtype}) — a numeric "
-                        "column would silently use the wrong unit")
-                ts_all = (pdf[order_by[0]].astype("int64")
-                          // 1_000_000).to_numpy()
+                ts_all = _ts_ms(pdf[order_by[0]])
 
             change = _boundaries(pdf)
             gstarts = np.flatnonzero(change)
@@ -719,22 +829,7 @@ class MatchRecognize(PTransform):
                     return (None if codes is None else codes[_lo:_hi],
                             rl[_lo:_hi])
 
-                # match-state predicates (FIRST/LAST refs in DEFINE):
-                # bind the group's column views; the matcher calls
-                # ctx[sym](pos, acc) on top of the mask bit
-                ctx = {sym: (lambda pos, acc, _f=d.ctx_fn, _gc=gcols:
-                             _f(_gc, pos,
-                                [(unalias.get(s, s), i) for s, i in acc]
-                                if unalias else acc))
-                       for sym, d in defines.items()
-                       if isinstance(d, Define)
-                       and d.ctx_fn is not None} or None
-
-                def row(i, _lo=g_lo, _gc=gcols):
-                    if records is not None:
-                        return records[_lo + i]
-                    return {c: v[i] for c, v in _gc.items()}
-
+                ctx = core.ctx(gcols, gn)
                 starts = np.flatnonzero(lead_all[g_lo:g_hi])
                 if anchor_start:
                     # ^ : the only admissible candidate start is row 0
@@ -745,68 +840,29 @@ class MatchRecognize(PTransform):
                 key_rec = {k: gcols[k][0] for k in keys}
                 if within_ms is not None:
                     ts_arr = ts_all[g_lo:g_hi]
-                i = 0
-                si = 0
-                n_starts = len(starts)
                 # SQL:2016 MATCH_NUMBER is sequential per MATCH within
                 # its partition, not per emitted row: a match whose
                 # rows are all excluded via {- -} still advances it
-                # (deriving from out[-1] would reuse the number — and
-                # diverge from the streaming path, which increments a
-                # persisted counter per match).
-                match_counter = 0
-                while si < n_starts:
-                    pos = starts[si]
+                # (the streaming path persists the same counter).
+                i = match_no = 0
+                for pos in starts:
                     if pos < i:
-                        si += 1
                         continue
+                    j_end = gn
                     if within_ms is not None:
                         # WITHIN bound: candidate rows are those inside
                         # the start row's time window
                         j_end = int(np.searchsorted(
                             ts_arr, ts_arr[pos] + within_ms,
                             side="right"))
-                        m = _match_at(gmasks, j_end, pos, pattern, ctx,
-                                      require_end=req_end, fast=gfast)
-                    else:
-                        m = _match_at(gmasks, gn, pos, pattern, ctx,
-                                      require_end=req_end, fast=gfast)
+                    m = _match_at(gmasks, j_end, pos, pattern, ctx,
+                                  require_end=req_end, fast=gfast)
                     if m:
-                        # suppression is POSITIONAL: mark the excluded
-                        # occurrences' rows BEFORE un-aliasing, then
-                        # give measures / skip / classifier the
-                        # original names
-                        excl_rows = {idx for sym, idx in m
-                                     if sym in excluded}
-                        if unalias:
-                            m = [(unalias.get(sym, sym), idx)
-                                 for sym, idx in m]
-                        match_rows = [(sym, row(idx)) for sym, idx in m]
-                        meas = {name: fn(match_rows)
-                                for name, fn in measures.items()}
-                        if all_rows:
-                            match_counter += 1
-                            match_no = match_counter
-                            for ridx, (sym, r) in enumerate(match_rows):
-                                if m[ridx][1] in excl_rows:
-                                    continue
-                                meas_r = (meas if not running else
-                                          {name: (meas[name] if getattr(
-                                              fn, "final_semantics",
-                                              False)
-                                              else fn(
-                                                  match_rows[:ridx + 1]))
-                                           for name, fn
-                                           in measures.items()})
-                                out.append({**r, **meas_r,
-                                            "__classifier": sym,
-                                            "__match_number": match_no})
-                        else:
-                            out.append({**key_rec, **meas})
-                        i = _next_start(after_match, m, pos)
+                        match_no += 1
+                        i = core.emit(m, pos, gcols, key_rec, match_no,
+                                      out)
                     else:
                         i = pos + 1
-                    si += 1
 
         def gen(batches):
             """mapInPandas driver over a (keys + order_by)-sorted
@@ -831,12 +887,12 @@ class MatchRecognize(PTransform):
                 out: list = []
                 process(body, out)
                 if out:
-                    yield pd.DataFrame(out, columns=out_cols)
+                    yield pd.DataFrame(out, columns=core.out_cols)
             if carry is not None and len(carry):
                 out = []
                 process(carry, out)
                 if out:
-                    yield pd.DataFrame(out, columns=out_cols)
+                    yield pd.DataFrame(out, columns=core.out_cols)
 
         # repartition by key + sort within partitions replaces the
         # per-group applyInPandas: one JVM sort instead of a pandas
@@ -845,7 +901,7 @@ class MatchRecognize(PTransform):
         # and ~100 batch calls at sf1
         out = (pcoll.df.repartition(*keys)
                .sortWithinPartitions(*keys, *order_by)
-               .mapInPandas(gen, schema=schema))
+               .mapInPandas(gen, schema=core.schema))
         return pcoll.with_df(out)
 
     def _expand_streaming(self, pcoll: PCollection) -> PCollection:
@@ -878,17 +934,15 @@ class MatchRecognize(PTransform):
         shift context) survives the drain, so streaming numbers agree
         with the batch replay; ``drain_state_ttl`` bounds that record's
         lifetime for unbounded key cardinalities.
-        """
-        import pickle
 
+        State is one record per key, the columnar ``{cols, mn, ctx}``
+        of ``_encode_state``; a record in any other format (as written
+        by builds before it) fails the query instead of restoring.
+        """
         import numpy as np
         import pandas as pd
         from pyspark.sql.streaming.state import GroupStateTimeout
 
-        all_rows = self.rows_per_match == ALL_ROWS_PER_MATCH
-        running = all_rows and self.measure_semantics == "running"
-        excluded = self.exclude_symbols
-        unalias = self.symbol_aliases
         for sym, d in self.defines.items():
             if isinstance(d, Define) and d.frontier_sensitive:
                 raise ValueError(
@@ -898,97 +952,25 @@ class MatchRecognize(PTransform):
                     "evaluate it safely — use batch mode or rewrite the "
                     "predicate row-locally (PREV-only masks ARE "
                     "supported: declare prev_depth)")
-        # Match-state (FIRST/LAST) ctx defines ARE streaming-safe: they
-        # only read rows already inside the match (all <= current pos),
-        # never the frontier. Phantom positions evaluate as True — the
-        # same all-matching stand-in the masks use.
-        has_ctx = any(isinstance(d, Define) and d.ctx_fn is not None
-                      for d in self.defines.values())
+        core = _MatchCore(self)
         # PREV-only masks are backward-looking: retain max_prev consumed
         # rows as shift context so PREV at the buffer head still sees
         # its (consumed) predecessor, matching the batch sort.
         max_prev = max((d.prev_depth for d in self.defines.values()
                         if isinstance(d, Define)), default=0)
-        keys = self.partition_by
-        order_by = self.order_by
+        keys, order_by, pattern = self.partition_by, self.order_by, self.pattern
         ts_col = pcoll.ts_col or order_by[0]
-        if not isinstance(pcoll.df.schema[ts_col].dataType,
-                          (T.TimestampType, T.TimestampNTZType)):
-            raise TypeError(
-                f"streaming MATCH_RECOGNIZE needs a timestamp event-time "
-                f"column ({ts_col} is "
-                f"{pcoll.df.schema[ts_col].dataType.simpleString()})")
-        pattern, defines = self.pattern, self.defines
-        measures, after_match = self.measures, self.after_match
-        within_ms = self.within_ms
-        drain_ttl_ms = self.drain_ttl_ms
-        schema = self.output_schema
-        if isinstance(schema, str):
-            schema = T._parse_datatype_string(schema)
-        if all_rows and "__classifier" not in schema.fieldNames():
-            schema = (schema
-                      .add("__classifier", T.StringType())
-                      .add("__match_number", T.LongType()))
-        out_cols = [f.name for f in schema.fields]
-
-        def masks_for(pdf):
-            n = len(pdf)
-            records = None
-            ms = {}
-            for sym, d in defines.items():
-                mask_fn = d.mask_fn if isinstance(d, Define) else None
-                if mask_fn is not None:
-                    ms[sym] = np.asarray(mask_fn(pdf)).astype(bool)
-                else:
-                    fn = d.row_fn if isinstance(d, Define) else d
-                    if records is None:
-                        records = pdf.to_dict(orient="records")
-                    ms[sym] = np.fromiter((bool(fn(r)) for r in records),
-                                          dtype=bool, count=n)
-            return ms
-
-        def ts_ms_array(s):
-            # vectorized pd.Timestamp(v).value // 1e6 (UTC ms): tz-aware
-            # normalizes to UTC first, matching Timestamp.value
-            if getattr(s.dtype, "tz", None) is not None:
-                s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-            return s.to_numpy().astype("datetime64[ms]").astype(np.int64)
-
-        def coldict(df):
-            # state codec (r15): the buffer crosses the state boundary
-            # as pickled {column -> numpy array}, NOT a list of per-row
-            # dicts — numeric/datetime columns serialize as raw buffers
-            # and strings as one object array, so encode/decode cost is
-            # O(columns) array ops instead of O(rows) dict building.
-            # This is the coder-encoded-state discipline of
-            # trigger_manager.py:123 (Beam never keeps state as live
-            # Python objects either).
-            if df is None or not len(df):
-                return None
-            return {c: df[c].to_numpy() for c in df.columns}
+        _require_timestamp(pcoll.df, ts_col,
+                           "streaming MATCH_RECOGNIZE's event time")
+        within_ms, drain_ttl_ms = self.within_ms, self.drain_ttl_ms
+        phantoms = max(1, _pattern_min_rows(pattern))
 
         def fn(key, pdfs, state):
             parts, match_no, ctx_df = [], 0, None
             if state.exists:
-                saved = pickle.loads(bytes(state.get[0]))
-                if isinstance(saved, list):
-                    # pre-all-rows state pickled the bare buffer list
-                    if saved:
-                        parts.append(pd.DataFrame(saved))
-                elif "cols" in saved:
-                    # r15 columnar state
-                    match_no = saved["mn"]
-                    if saved["cols"] is not None:
-                        parts.append(pd.DataFrame(saved["cols"]))
-                    if saved["ctx"] is not None:
-                        ctx_df = pd.DataFrame(saved["ctx"])
-                else:
-                    # r14 dict-records state
-                    match_no = saved["mn"]
-                    if saved["buf"]:
-                        parts.append(pd.DataFrame(saved["buf"]))
-                    if saved.get("ctx"):
-                        ctx_df = pd.DataFrame(saved["ctx"])
+                held, match_no, ctx_df = _decode_state(state.get[0])
+                if held is not None:
+                    parts.append(held)
             for pdf in pdfs:
                 if len(pdf):
                     parts.append(pdf)
@@ -1011,7 +993,7 @@ class MatchRecognize(PTransform):
                                   ignore_index=True)
             wm = state.getCurrentWatermarkMs()
 
-            ts_all = ts_ms_array(buf[ts_col])
+            ts_all = _ts_ms(buf[ts_col])
             over = ts_all > wm
             # first index with ts > wm == the old linear-scan stop
             n_mature = int(over.argmax()) if over.any() else len(buf)
@@ -1020,7 +1002,6 @@ class MatchRecognize(PTransform):
             consumed = 0
             if n_mature > 0:
                 mature = buf.iloc[:n_mature]
-                phantoms = max(1, _pattern_min_rows(pattern))
                 if max_prev and ctx_df is not None and len(ctx_df):
                     # evaluate masks over (shift context + mature) and
                     # slice the context off: PREV at the buffer head
@@ -1028,57 +1009,32 @@ class MatchRecognize(PTransform):
                     # the batch sort would
                     n_ctx = len(ctx_df)
                     ext = pd.concat([ctx_df, mature], ignore_index=True)
-                    raw_masks = {sym: np.asarray(m)[n_ctx:]
-                                 for sym, m in masks_for(ext).items()}
+                    raw_masks = {sym: m[n_ctx:]
+                                 for sym, m in core.masks(ext).items()}
                 else:
-                    raw_masks = masks_for(mature)
-                masks = {
-                    sym: np.concatenate(
-                        [np.asarray(mask), np.ones(phantoms, dtype=bool)])
-                    for sym, mask in raw_masks.items()}
+                    raw_masks = core.masks(mature)
+                masks = {sym: np.concatenate(
+                            [mask, np.ones(phantoms, dtype=bool)])
+                         for sym, mask in raw_masks.items()}
                 n_ext = n_mature + phantoms
                 ts_arr = ts_all[:n_mature]
-                ctx = None
-                if has_ctx:
-                    cols = {c: mature[c].to_numpy()
-                            for c in mature.columns}
-                    ctx = {sym: (lambda pos, acc, _f=d.ctx_fn:
-                                 pos >= n_mature  # phantom: matches
-                                 or _f(cols, pos,
-                                       [(unalias.get(s, s), i)
-                                        for s, i in acc]
-                                       if unalias else acc))
-                           for sym, d in defines.items()
-                           if isinstance(d, Define)
-                           and d.ctx_fn is not None}
-                # r14: the batch path's run-length fast path, ported —
-                # greedy symbol runs over the buffered mature prefix
-                # consume precomputed numpy consecutive-true lengths
-                # instead of one Python mask probe per row. The run
-                # arrays span the full phantom-extended buffer; every
-                # _match_at call caps by its own n_rows, so one cache
-                # serves the open and the WITHIN-closed variants.
-                fast = _make_fast_runs(
-                    masks, frozenset(ctx) if ctx else frozenset())
+                cols = {c: mature[c].to_numpy() for c in mature.columns}
+                ctx = core.ctx(cols, n_mature)
+                # the run arrays span the full phantom-extended buffer;
+                # every _match_at call caps by its own n_rows, so one
+                # cache serves the open and the WITHIN-closed variants
+                fast = _make_fast_runs(masks, frozenset(core.ctx_fns))
+                key_rec = dict(zip(keys, key))
                 i = 0
                 while i < n_mature:
-                    closed = False
-                    if within_ms is not None:
-                        limit = ts_arr[i] + within_ms
-                        if wm >= limit:
-                            # window over: decide on rows <= limit only,
-                            # no phantoms — definitive either way
-                            closed = True
-                            j_end = int(np.searchsorted(ts_arr, limit,
-                                                        side="right"))
-                            m = _match_at(masks, j_end, i, pattern, ctx,
-                                          fast=fast)
-                        else:
-                            m = _match_at(masks, n_ext, i, pattern, ctx,
-                                          fast=fast)
-                    else:
-                        m = _match_at(masks, n_ext, i, pattern, ctx,
-                                      fast=fast)
+                    j_end, closed = n_ext, False
+                    if within_ms is not None and wm >= ts_arr[i] + within_ms:
+                        # window over: decide on rows <= limit only, no
+                        # phantoms — definitive either way
+                        closed = True
+                        j_end = int(np.searchsorted(
+                            ts_arr, ts_arr[i] + within_ms, side="right"))
+                    m = _match_at(masks, j_end, i, pattern, ctx, fast=fast)
                     if m is None:
                         # not even all-matching future rows can complete
                         # a match here: release the row
@@ -1088,43 +1044,9 @@ class MatchRecognize(PTransform):
                         # definitive: window closed, or fully mature
                         # (greedy would have taken phantoms if extension
                         # were possible)
-                        excl_rows = {idx for sym, idx in m
-                                     if sym in excluded}
-                        if unalias:
-                            m = [(unalias.get(sym, sym), idx)
-                                 for sym, idx in m]
-                        # matches label consecutive rows (the matcher
-                        # advances p+1), so one slice-to_dict per match
-                        # materializes row dicts ONLY for matched rows —
-                        # the rest of the buffer never leaves columnar
-                        lo = m[0][1]
-                        span = (buf.iloc[lo:m[-1][1] + 1]
-                                .to_dict(orient="records"))
-                        match_rows = [(sym, span[idx - lo])
-                                      for sym, idx in m]
-                        meas = {name: fmeas(match_rows)
-                                for name, fmeas in measures.items()}
                         match_no += 1
-                        if all_rows:
-                            for ridx, (sym, r) in enumerate(match_rows):
-                                if m[ridx][1] in excl_rows:
-                                    continue
-                                meas_r = (meas if not running else
-                                          {name: (meas[name] if getattr(
-                                              fmeas, "final_semantics",
-                                              False)
-                                              else fmeas(
-                                                  match_rows[:ridx + 1]))
-                                           for name, fmeas
-                                           in measures.items()})
-                                out.append({**r, **meas_r,
-                                            "__classifier": sym,
-                                            "__match_number": match_no})
-                        else:
-                            out.append({**dict(zip(keys, key)), **meas})
-                        nxt = _next_start(after_match, m, i)
-                        consumed = max(consumed, nxt)
-                        i = nxt
+                        i = core.emit(m, i, cols, key_rec, match_no, out)
+                        consumed = max(consumed, i)
                     else:
                         break  # touches phantoms: hold until decidable
             if max_prev:
@@ -1135,9 +1057,8 @@ class MatchRecognize(PTransform):
                           if ctx_parts else None)
             held = len(buf) - consumed
             if held > 0:
-                state.update((pickle.dumps(
-                    {"cols": coldict(buf.iloc[consumed:]),
-                     "mn": match_no, "ctx": coldict(ctx_df)}),))
+                state.update((_encode_state(buf.iloc[consumed:], match_no,
+                                            ctx_df),))
                 # wake when the watermark passes the earliest held row —
                 # or, with WITHIN, when its window closes (guaranteed
                 # drain even if the key never sees another row)
@@ -1150,19 +1071,17 @@ class MatchRecognize(PTransform):
                 # numbering (and PREV context at the next row) survives
                 # — the batch-equivalence guarantee. ~bytes per key;
                 # drain_state_ttl expires it for idle keys.
-                state.update((pickle.dumps(
-                    {"cols": None, "mn": match_no,
-                     "ctx": coldict(ctx_df)}),))
+                state.update((_encode_state(None, match_no, ctx_df),))
                 if drain_ttl_ms is not None:
                     state.setTimeoutTimestamp(wm + drain_ttl_ms)
             else:
                 state.remove()
             if out:
-                yield pd.DataFrame(out, columns=out_cols)
+                yield pd.DataFrame(out, columns=core.out_cols)
 
         out_df = (pcoll.df.groupBy(*keys)
                   .applyInPandasWithState(
-                      fn, outputStructType=schema,
+                      fn, outputStructType=core.schema,
                       stateStructType="blob binary",
                       outputMode="append",
                       timeoutConf=GroupStateTimeout.EventTimeTimeout))

@@ -65,7 +65,7 @@ class Impulse(PTransform):
         return PCollection(df, pipeline=pbegin.pipeline)
 
 
-def _map_in_pandas_rows(df: DataFrame, row_fn: Callable[[dict], Iterable[dict]],
+def _map_in_pandas_rows(df: DataFrame, fn: Callable[[dict], Iterable[dict]],
                         out_schema: T.StructType | str) -> DataFrame:
     """Arrow-batched row-wise apply: Beam DoFn.process over dict-rows."""
     import pandas as pd
@@ -78,7 +78,7 @@ def _map_in_pandas_rows(df: DataFrame, row_fn: Callable[[dict], Iterable[dict]],
         for pdf in batches:
             out = []
             for row in pdf.to_dict(orient="records"):
-                out.extend(row_fn(row))
+                out.extend(fn(row))
             if out:
                 yield pd.DataFrame(out, columns=names)
 

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from beam_spark.pcollection import PCollection, PTransform
-from beam_spark.operators.graph import _fixed_point
+from beam_spark.operators.graph import _fixed_point, _release_superseded
 from beam_spark.operators.text import tokens, word_shingles_on
 
 # Deterministic MinHash permutation parameters (public Carter-Wegman
@@ -452,7 +452,7 @@ class ConnectedComponents(PTransform):
         detected by an order-insensitive edge-set fingerprint
         (count + sum of per-edge hashes) going stable."""
         ic, jc = self.i_col, self.j_col
-        edges = (pcoll.df
+        start = (pcoll.df
                  .select(F.greatest(F.col(ic), F.col(jc)).alias("u"),
                          F.least(F.col(ic), F.col(jc)).alias("v"))
                  .filter(F.col("u") != F.col("v"))
@@ -503,7 +503,7 @@ class ConnectedComponents(PTransform):
             return bool(row["n"]) or bool(row["h"])
 
         edges, _, converged = _fixed_point(
-            edges, lambda e: small_star(large_star(e)),
+            start, lambda e: small_star(large_star(e)),
             self.max_iterations, changed)
         if not converged:
             self._nonconverged()
@@ -515,6 +515,7 @@ class ConnectedComponents(PTransform):
                           F.coalesce("v", "node").alias("comp"))
                   .groupBy("node").agg(F.min("comp").alias("comp")))
         final = labels.localCheckpoint(eager=True)
+        _release_superseded([start, edges, nodes], final)
         return pcoll.with_df(final)
 
     def expand(self, pcoll: PCollection) -> PCollection:
@@ -554,10 +555,11 @@ class ConnectedComponents(PTransform):
 
         labels, _, converged = _fixed_point(
             seed, propagate, self.max_iterations, changed)
+        # the labels' lineage is cut, so the edge cache and seed can go
+        sym.unpersist()
+        _release_superseded([seed], labels)
         if not converged:
             self._nonconverged()
-        # the labels' lineage is cut, so the edge cache can go
-        sym.unpersist()
         return pcoll.with_df(labels)
 
 

@@ -40,6 +40,19 @@ def _checkpoint_rdd(df: DataFrame):
     return df._jdf.queryExecution().analyzed().rdd()
 
 
+def _release_superseded(frames, successor: DataFrame) -> bool:
+    """Drop the localCheckpointed ``frames`` from the block manager once
+    ``successor`` is materialized, i.e. its lineage no longer reads
+    them; returns whether it was. ``successor`` itself is kept."""
+    if not _checkpoint_rdd(successor).isCheckpointed():
+        return False
+    sc = successor.sparkSession.sparkContext._jsc.sc()
+    for f in frames:
+        if f is not successor:
+            sc.unpersistRDD(_checkpoint_rdd(f).id(), False)
+    return True
+
+
 def _fixed_point(start: DataFrame, step, rounds: int, changed=None,
                  per_check: int = 1):
     """Iterate ``step`` (one round: frame -> frame) from ``start`` for
@@ -65,9 +78,9 @@ def _fixed_point(start: DataFrame, step, rounds: int, changed=None,
       manager. ``DataFrame.unpersist`` cannot do this — it only
       uncaches cached queries — so the context drops the RDD, which
       also skips the warning ``RDD.unpersist`` logs for a locally
-      checkpointed RDD. ``start`` belongs to the caller and is kept.
+      checkpointed RDD (``_release_superseded``). ``start`` belongs to
+      the caller and is kept.
     """
-    sc = start.sparkSession.sparkContext._jsc.sc()
     cur, run, stale = start, 0, []
     while run < rounds:
         prev = cur
@@ -77,9 +90,7 @@ def _fixed_point(start: DataFrame, step, rounds: int, changed=None,
             cur = step(cur).localCheckpoint(eager=changed is None)
             run += 1
         done = changed is not None and not changed(cur, prev)
-        if _checkpoint_rdd(cur).isCheckpointed():
-            for f in stale:
-                sc.unpersistRDD(_checkpoint_rdd(f).id(), False)
+        if _release_superseded(stale, cur):
             stale = []
         if done:
             return cur, run, True

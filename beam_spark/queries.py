@@ -8369,10 +8369,9 @@ def q_cep(spark, sf_dir):
             partition_by="user_id",
             order_by=["ts", "event_id"],
             pattern=[("V", "+"), ("P", "1")],
-            defines={"V": vectorized(lambda pdf: pdf["event_type"] == "view",
-                                     lambda r: r["event_type"] == "view"),
-                     "P": vectorized(lambda pdf: pdf["event_type"] == "purchase",
-                                     lambda r: r["event_type"] == "purchase")},
+            defines={"V": vectorized(lambda pdf: pdf["event_type"] == "view"),
+                     "P": vectorized(
+                         lambda pdf: pdf["event_type"] == "purchase")},
             measures={
                 "purchase_event_id": lambda m: m[-1][1]["event_id"],
                 "n_views": lambda m: sum(1 for s, _ in m if s == "V"),

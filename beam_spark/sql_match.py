@@ -40,8 +40,8 @@ FIRST/LAST and as the symbol of any MEASURES aggregate (rows mapped to
 any member, in match order). Symbols without a DEFINE match any row
 (SQL standard). CLASSIFIER() returns the pattern variable of the last
 row of the match (ONE ROW PER MATCH semantics).
-DEFINE conditions compile to BOTH a row predicate and a vectorized
-numpy mask — the operator evaluates whole columns, no per-row Python.
+DEFINE conditions compile to vectorized numpy masks — the operator
+evaluates whole columns, no per-row Python.
 Nested sequence groups / cross-symbol PREV/NEXT references are out of
 scope (use the python MatchRecognize API directly).
 """
@@ -50,7 +50,6 @@ from __future__ import annotations
 
 import operator
 import re
-from typing import Callable
 
 from beam_spark.operators.cep import Define
 
@@ -71,17 +70,12 @@ _MEASURE_RE = re.compile(
 
 _PAT_TOKEN_RE = re.compile(r"\{-|-\}|\w+|[()|,+*?]|\{[^}]*\}")
 
-_ROW_OPS = {"=": lambda a, b: a == b, "<>": lambda a, b: a != b,
-            "!=": lambda a, b: a != b, ">=": lambda a, b: a >= b,
-            "<=": lambda a, b: a <= b, ">": lambda a, b: a > b,
-            "<": lambda a, b: a < b,
-            # NOT BETWEEN is a per-test disjunction, so it can't expand
-            # to two AND-chain comparisons like BETWEEN does
-            "__nb__": lambda a, b: a < b[0] or a > b[1]}
-_VEC_OPS = {"=": operator.eq, "<>": operator.ne, "!=": operator.ne,
-            ">=": operator.ge, "<=": operator.le, ">": operator.gt,
-            "<": operator.lt,
-            "__nb__": lambda s, b: (s < b[0]) | (s > b[1])}
+_OPS = {"=": operator.eq, "<>": operator.ne, "!=": operator.ne,
+        ">=": operator.ge, "<=": operator.le, ">": operator.gt,
+        "<": operator.lt}
+# NOT BETWEEN is a per-test disjunction, so it can't expand to two
+# AND-chain comparisons like BETWEEN does (masks only)
+_VEC_OPS = {**_OPS, "__nb__": lambda s, b: (s < b[0]) | (s > b[1])}
 
 _BETWEEN_RE = re.compile(
     r"(\w+)\.(\w+)\s+(NOT\s+)?BETWEEN\s+"
@@ -338,12 +332,8 @@ def _compile_condition(cond_sql: str, symbol: str,
             m |= np.asarray(d.mask_fn(pdf), dtype=bool)
         return m
 
-    row_fns = [d.row_fn for d in defs]
-    row_fn = (None if any(f is None for f in row_fns)
-              else (lambda r: any(f(r) for f in row_fns)))
-    return Define(row_fn=row_fn, mask_fn=mask,
-                  frontier_sensitive=any(d.frontier_sensitive
-                                         for d in defs),
+    return Define(mask,
+                  frontier_sensitive=any(d.frontier_sensitive for d in defs),
                   prev_depth=max(d.prev_depth for d in defs))
 
 
@@ -352,7 +342,7 @@ def _compile_and_chain(cond_sql: str, symbol: str,
     """AND-chain of ``SYM.col op (literal | PREV(SYM.col[,k]) |
     NEXT(SYM.col[,k]) | FIRST(SYM2.col[,k]) | LAST(SYM2.col[,k]))``
     comparisons -> Define with a vectorized whole-column mask (NULL
-    never matches, in both paths — including vectorized ``<>``).
+    never matches, including ``<>``).
 
     PREV/NEXT are ROW navigation over the sorted partition (SQL
     standard): they compile to column shifts, so even cross-row
@@ -366,15 +356,11 @@ def _compile_and_chain(cond_sql: str, symbol: str,
     from the ends of A's mapped-row list. ``A`` may be a SUBSET union
     variable. No mapped row (or offset past the list) compares as NULL:
     never matches. These compile to a match-state ``ctx_fn`` the
-    matcher evaluates on top of the mask (Define.ctx_fn).
-
-    A plain row predicate is also provided when no navigation is used
-    (API parity)."""
+    matcher evaluates on top of the mask (Define.ctx_fn)."""
     subsets = subsets or {}
     parts = _split_top_level(cond_sql.strip(), "AND")
     tests = []
     ctx_tests = []
-    has_nav = False
     next_used = False
     prev_k_max = 0
     for part in parts:
@@ -420,7 +406,6 @@ def _compile_and_chain(cond_sql: str, symbol: str,
             k = int(nav_k) if nav_k else 0
             ctx_tests.append((col, op, nav.upper(), members, nav_col, k))
         elif nav:
-            has_nav = True
             k = int(nav_k) if nav_k else 1
             if nav.upper() == "PREV":
                 shift = k
@@ -431,13 +416,6 @@ def _compile_and_chain(cond_sql: str, symbol: str,
             tests.append((col, op, ("__nav__", nav_col, shift)))
         else:
             tests.append((col, op, _parse_literal(lit)))
-
-    def predicate(row: dict) -> bool:
-        for col, op, val in tests:
-            v = row.get(col)
-            if v is None or not _ROW_OPS[op](v, val):
-                return False
-        return True
 
     def mask(pdf):
         import numpy as np
@@ -475,15 +453,14 @@ def _compile_and_chain(cond_sql: str, symbol: str,
                         return False
                 except (TypeError, ValueError):
                     pass
-                if not _ROW_OPS[op](v, t):
+                if not _OPS[op](v, t):
                     return False
             return True
 
     # only FORWARD (NEXT) navigation depends on the frontier; PREV-only
     # masks are streaming-safe with prev_depth rows of shift context
-    return Define(row_fn=None if (has_nav or ctx_tests) else predicate,
-                  mask_fn=mask, frontier_sensitive=next_used,
-                  ctx_fn=ctx_fn, prev_depth=prev_k_max)
+    return Define(mask, frontier_sensitive=next_used, ctx_fn=ctx_fn,
+                  prev_depth=prev_k_max)
 
 
 def _compile_measure(agg: str, sym: str, col: str,
@@ -726,8 +703,7 @@ def try_rewrite_match_recognize(sql: str, spark, tables: dict) -> str:
             # shadowed by a match-anything stub
             s = sym_aliases.get(s, s)
             defines.setdefault(s, Define(
-                row_fn=lambda r: True,
-                mask_fn=lambda pdf: __import__("numpy").ones(len(pdf), bool)))
+                lambda pdf: __import__("numpy").ones(len(pdf), bool)))
 
     measures, measure_types = {}, []
     df = tables[table_name] if table_name in tables else spark.table(table_name)

@@ -1,6 +1,8 @@
 """MATCH_RECOGNIZE matcher unit tests: quantifiers, backtracking,
 after-match skip modes."""
 
+import pytest
+
 from beam_spark.pcollection import Pipeline
 from beam_spark.operators.core import Create
 from beam_spark.operators.cep import (MatchRecognize, SKIP_TO_NEXT_ROW,
@@ -763,11 +765,6 @@ def test_streaming_ctx_defines_equal_batch(spark):
 
 def _stream_vs_batch(spark, batches, *, pattern, defines, measures,
                      schema, within=None, delay="10 seconds", **mr_extra):
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from beam_spark.pcollection import PCollection
     from beam_spark.streaming import (TestStream, WithWatermark,
                                       WriteStreamToMemory)
 
@@ -782,33 +779,51 @@ def _stream_vs_batch(spark, batches, *, pattern, defines, measures,
         ts.stream() | WithWatermark("t", delay)
         | MatchRecognize(**mr)
         | WriteStreamToMemory(output_mode="append")).collect())
+    return s_rows, _batch_rows(spark, batches, mr)
+
+
+def _batch_rows(spark, batches, mr):
+    """The batch MatchRecognize over every scripted row, sorted."""
+    import itertools
+
+    from pyspark.sql import functions as F
+
+    from beam_spark.pcollection import PCollection
 
     allrows = list(itertools.chain.from_iterable(batches))
     df = (spark.createDataFrame(
         [(r["t"], r["u"], r["typ"], r.get("v", 0)) for r in allrows],
         "t string, u long, typ string, v long")
         .withColumn("t", F.col("t").cast("timestamp")))
-    b_rows = sorted(tuple(r) for r in
-                    (PCollection(df, ts_col="t")
-                     | MatchRecognize(**mr)).df.collect())
-    return s_rows, b_rows
+    return sorted(tuple(r) for r in
+                  (PCollection(df, ts_col="t")
+                   | MatchRecognize(**mr)).df.collect())
 
 
-def _vp_config():
+def _vp_config(form="vectorized"):
+    """V+ P funnel; ``form`` picks the DEFINE form: ``vectorized``
+    masks or plain row callables."""
     from beam_spark.operators.cep import vectorized
 
+    if form == "vectorized":
+        defines = {"V": vectorized(lambda pdf: pdf["typ"] == "view"),
+                   "P": vectorized(lambda pdf: pdf["typ"] == "purchase")}
+    else:
+        defines = {"V": lambda r: r["typ"] == "view",
+                   "P": lambda r: r["typ"] == "purchase"}
     return dict(
         pattern=[("V", "+"), ("P", "1")],
-        defines={"V": vectorized(lambda pdf: pdf["typ"] == "view"),
-                 "P": vectorized(lambda pdf: pdf["typ"] == "purchase")},
+        defines=defines,
         measures={"n_views": lambda m: sum(1 for s, _ in m if s == "V"),
                   "purchase_v": lambda m: m[-1][1]["v"]},
         schema="u long, n_views long, purchase_v long")
 
 
-def test_streaming_equals_batch_basic_and_interleaved(spark):
+@pytest.mark.parametrize("form", ["vectorized", "row_callable"])
+def test_streaming_equals_batch_basic_and_interleaved(spark, form):
     """Two users' funnels interleaved across micro-batches; trailing
-    rows advance the watermark so every match becomes definitive."""
+    rows advance the watermark so every match becomes definitive. Both
+    DEFINE forms, masks and plain row callables, run on the stream."""
     batches = [
         [{"t": "2024-01-01 00:00:10", "u": 1, "typ": "view", "v": 1},
          {"t": "2024-01-01 00:00:12", "u": 2, "typ": "view", "v": 1}],
@@ -823,7 +838,7 @@ def test_streaming_equals_batch_basic_and_interleaved(spark):
          {"t": "2024-01-01 00:10:00", "u": 2, "typ": "error", "v": 0}],
         [{"t": "2024-01-01 00:20:00", "u": 1, "typ": "error", "v": 0}],
     ]
-    s, b = _stream_vs_batch(spark, batches, **_vp_config())
+    s, b = _stream_vs_batch(spark, batches, **_vp_config(form))
     assert s == b and len(b) == 3
 
 
@@ -950,6 +965,16 @@ def test_skip_to_last_and_first_symbol(spark):
     with _pytest.raises(Exception, match="infinite loop"):
         (Pipeline(spark) | Create(rows("a", "b"))
          | MatchRecognize(**bad, after_match=skip_to_first("A"))).collect()
+
+    # malformed clauses fail at construction, before any data is read:
+    # an unknown skip string or symbol, and a rows_per_match spelling
+    # that used to run ONE ROW PER MATCH silently
+    for kw in ({"after_match": "past_last"},
+               {"after_match": ("to_last", "B", "extra")},
+               {"after_match": skip_to_last("Z")},
+               {"rows_per_match": "all_rows"}):
+        with _pytest.raises(ValueError, match=next(iter(kw))):
+            MatchRecognize(**bad, **kw)
 
 
 def test_sql_after_match_skip_to_symbol(spark):
@@ -1176,6 +1201,83 @@ def test_streaming_drain_ttl_expires_counter(spark):
     # second match numbered 1 again
     assert by_match == [1]
     assert len(rows) == 4
+
+
+def test_streaming_restart_from_checkpoint_equals_batch(spark, tmp_path):
+    """Stop a streaming MatchRecognize after the first three files and
+    restart it from the same checkpoint with the rest: the file sink
+    then holds what the batch query returns over all files. Both users
+    have an open funnel across the cut (views buffered in state, the
+    purchases after the restart), and user 1's second match continues
+    ALL ROWS numbering from the restored counter."""
+    from beam_spark.operators.cep import ALL_ROWS_PER_MATCH
+    from beam_spark.streaming import (TestStream, WithWatermark,
+                                      WriteStreamToFiles)
+
+    cfg = _vp_config()
+    mr = dict(partition_by="u", order_by=["t"], pattern=cfg["pattern"],
+              defines=cfg["defines"], measures=cfg["measures"],
+              output_schema=("t timestamp, u long, typ string, v long, "
+                             "n_views long, purchase_v long"),
+              rows_per_match=ALL_ROWS_PER_MATCH)
+    before_cut = [
+        [{"t": "2024-01-01 00:00:10", "u": 1, "typ": "view", "v": 1},
+         {"t": "2024-01-01 00:00:20", "u": 1, "typ": "purchase", "v": 5},
+         {"t": "2024-01-01 00:00:12", "u": 2, "typ": "view", "v": 1}],
+        [{"t": "2024-01-01 00:00:40", "u": 1, "typ": "view", "v": 2},
+         {"t": "2024-01-01 00:00:45", "u": 2, "typ": "view", "v": 3}],
+        # another key advances the watermark past user 1's first match
+        [{"t": "2024-01-01 00:00:46", "u": 3, "typ": "error", "v": 0}],
+    ]
+    after_cut = [
+        [{"t": "2024-01-01 00:00:50", "u": 1, "typ": "purchase", "v": 9},
+         {"t": "2024-01-01 00:00:55", "u": 2, "typ": "purchase", "v": 7}],
+        [{"t": "2024-01-01 00:10:00", "u": 1, "typ": "error", "v": 0},
+         {"t": "2024-01-01 00:10:00", "u": 2, "typ": "error", "v": 0}],
+        [{"t": "2024-01-01 00:20:00", "u": 1, "typ": "error", "v": 0}],
+    ]
+    ts = TestStream(spark, "t timestamp, u long, typ string, v long")
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run(batches):
+        for b in batches:
+            ts.add_elements(b)
+        (ts.stream() | WithWatermark("t", "10 seconds")
+         | MatchRecognize(**mr)
+         | WriteStreamToFiles(out_dir, checkpoint=ckpt))
+        return sorted(tuple(r) for r in spark.read.parquet(out_dir).collect())
+
+    first = run(before_cut)
+    # only user 1's first match is definitive before the cut
+    assert {(r[1], r[-1]) for r in first} == {(1, 1)} and len(first) == 2
+    restarted = run(after_cut)
+    batch = _batch_rows(spark, before_cut + after_cut, mr)
+    assert restarted == batch
+    assert sorted({(r[1], r[-1]) for r in batch}) == [(1, 1), (1, 2), (2, 1)]
+    assert len(batch) == 7
+
+
+def test_streaming_state_record_is_columnar_only():
+    """Streaming state has one format, the columnar {cols, mn, ctx}
+    record: it round-trips, and a blob in an older format (a bare row
+    list, or dict-records under "buf") raises instead of being
+    misread."""
+    import pickle
+
+    import pandas as pd
+
+    from beam_spark.operators.cep import _decode_state, _encode_state
+
+    held = pd.DataFrame({"u": [1, 1], "v": [3, 4]})
+    rows_, mn, ctx = _decode_state(_encode_state(held, 2, None))
+    assert rows_.equals(held) and mn == 2 and ctx is None
+    rows_, mn, ctx = _decode_state(_encode_state(None, 5, held.iloc[1:]))
+    assert rows_ is None and mn == 5
+    assert ctx.to_dict(orient="records") == [{"u": 1, "v": 4}]
+    for old in ([{"u": 1, "v": 3}],
+                {"buf": [{"u": 1, "v": 3}], "mn": 2, "ctx": None}):
+        with pytest.raises(ValueError, match="columnar"):
+            _decode_state(pickle.dumps(old))
 
 
 def test_streaming_equals_batch_permute(spark):

@@ -1551,7 +1551,8 @@ def test_pipeline_scoped_cache_release(spark):
     release_caches()) unpersists everything transforms pinned under
     the pipeline in one shot, and a pipeline-less transform's
     release() unpersists what it pinned. FuzzyDedupKeep releases its
-    inner MinHashLSH itself, keeping only CC's two checkpoints."""
+    inner MinHashLSH itself, and CC keeps only its labels checkpoint
+    once they are materialized."""
     from beam_spark.operators.core import Partition, Tee
     from beam_spark.operators.dedupe import (
         ContainmentPairs, DedupAgainstCorpus, FuzzyDedupKeep,
@@ -1622,10 +1623,23 @@ def test_pipeline_scoped_cache_release(spark):
             assert all(not f.storageLevel.useMemory for f in pinned), op
 
     jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet())
-    (PCollection(df) | FuzzyDedupKeep(threshold=0.5)).df.collect()
-    kept = len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    def kept_by(frame):
+        before = set(jsc.getPersistentRDDs().keySet())
+        (PCollection(frame) | FuzzyDedupKeep(threshold=0.5)).df.collect()
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    # no near-dup pair: CC's labels over the empty graph are only
+    # materialized by the caller's collect, so its seed (no partitions,
+    # no blocks) cannot be dropped inside CC
+    kept = kept_by(df)
     assert kept <= 2, kept              # CC seed + labels, no MinHash
+    words = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
+    near_dup = spark.createDataFrame(
+        [(0, words), (1, words + " kilo"), (2, "zulu yankee xray whiskey")],
+        "doc_id long, text string")
+    kept = kept_by(near_dup)
+    assert kept <= 1, kept              # CC labels; no seed, no MinHash
 
 
 def test_shortest_paths_semantics(spark):
@@ -1692,8 +1706,11 @@ def test_fixed_point_loop_rules(spark):
     four); and superseded rounds are released, lazy or eager —
     PageRank(iterations=10) keeps its four setup frames plus one round
     cached, not 14, and Hits(iterations=10) its two plus one, not 22.
+    ConnectedComponents keeps only its result: neither the label
+    algorithm's seed nor the star algorithm's edge and node frames.
     The unconverged warn/raise paths are covered by
     test_connected_components_large_ids_and_nonconvergence."""
+    from beam_spark.operators.dedupe import ConnectedComponents
     from beam_spark.operators.graph import (Hits, PageRank, ShortestPaths,
                                             _fixed_point)
 
@@ -1735,6 +1752,15 @@ def test_fixed_point_loop_rules(spark):
     _, kept = cached_by(
         lambda: (PCollection(chain) | Hits(iterations=10)).df.collect())
     assert kept <= 2 + 1, kept          # edges/nodes + one round
+
+    pairs = chain.select(F.col("src").alias("i"), F.col("dst").alias("j"))
+    for algorithm in ("label", "star"):
+        comps, kept = cached_by(lambda: (
+            PCollection(pairs)
+            | ConnectedComponents(algorithm=algorithm)).df.collect())
+        assert {(r["node"], r["comp"]) for r in comps} == \
+            {(k, 0) for k in range(5)}, algorithm
+        assert kept <= 1, (algorithm, kept)   # the result only
 
 
 def test_record_linkage_score(spark):
