@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from beam_spark.pcollection import PCollection, PTransform
+from beam_spark.session import batch_shuffle_partitions
 
 
 class ScdType2Apply(PTransform):
@@ -491,7 +492,7 @@ def write_zordered(df: DataFrame, path: str, cols, bits: int = 16,
     write parquet WITHOUT the key column — every participating column
     gets file-level min/max locality, so scans filtering on ANY of
     them prune files. ``partitions`` controls the output file count
-    (default: the session's shuffle partitions). The exchange this
+    (default: the session's batch shuffle partitions). The exchange this
     adds (one repartitionByRange on the key) is the write's shuffle —
     there is no extra pass. ``scale='rank'`` clusters DOUBLE (any
     orderable numeric) columns via equi-depth rank scaling — see
@@ -504,8 +505,7 @@ def write_zordered(df: DataFrame, path: str, cols, bits: int = 16,
           else HilbertKey(cols, bits=bits, output_col="__zk",
                           scale=scale))
     keyed = (PCollection(df) | op).df
-    n = partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = partitions or batch_shuffle_partitions(df.sparkSession)
     (keyed.repartitionByRange(n, F.col("__zk"))
      .sortWithinPartitions("__zk")
      .drop("__zk")

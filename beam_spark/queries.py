@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from beam_spark.pcollection import PCollection
 from beam_spark.operators.core import Filter, Select, fan_out
 from beam_spark.operators.group import CombinePerKey
+from beam_spark.session import batch_shuffle_partitions
 
 # registry: name -> (fn(spark, sf_dir) -> DataFrame, oracle_sql | None)
 _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {}
@@ -8910,7 +8911,7 @@ def q_nexmark10(spark, sf_dir):
     ev = table(spark, sf_dir, "events").df.select(
         "event_id", "event_type", "ts",
         F.date_trunc("hour", "ts").alias("window_start"))
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = batch_shuffle_partitions(spark)
     # 720 hourly destinations = 720 task-commit renames: committer v2
     # skips the job-commit re-rename, and the summary/_SUCCESS files
     # are pure overhead at one file per destination (measured ~9% off

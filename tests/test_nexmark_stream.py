@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from beam_spark.pcollection import PCollection
-from beam_spark.streaming import WriteStreamToMemory
+from beam_spark.streaming import WriteStreamToFiles, WriteStreamToMemory
 
 
 def build_stream_dir(sf_dir: str, tmpdir: str, batches: int) -> int:
@@ -72,13 +72,15 @@ def q5_hot_users(spark, tmpdir: str) -> int:
     return sum(len(v) for v in top.values())
 
 
+def _q7(events):
+    return (events.groupBy(F.window("ts", "1 hour"))
+            .agg(F.max_by(F.struct("event_id", "user_id", "value"),
+                          F.struct(F.col("value"), F.col("event_id")))
+                 .alias("m")))
+
+
 def q7_highest_bid(spark, tmpdir: str) -> int:
-    return len(_drain(_source(spark, tmpdir)
-                      .groupBy(F.window("ts", "1 hour"))
-                      .agg(F.max_by(F.struct("event_id", "user_id", "value"),
-                                    F.struct(F.col("value"),
-                                             F.col("event_id")))
-                           .alias("m"))))
+    return len(_drain(_q7(_source(spark, tmpdir))))
 
 
 def q11_user_sessions(spark, tmpdir: str) -> int:
@@ -106,15 +108,49 @@ def _batch_events(spark, stream_dir):
 def test_q7_stream_equals_batch(spark, stream_dir):
     d, _ = stream_dir
     n_stream = q7_highest_bid(spark, d)
-    batch = (_batch_events(spark, d)
-             .groupBy(F.window("ts", "1 hour"))
-             .agg(F.max_by(F.struct("event_id", "user_id", "value"),
-                           F.struct(F.col("value"), F.col("event_id")))
-                  .alias("m")))
+    batch = _q7(_batch_events(spark, d))
     # append mode holds windows the watermark has not passed: the tail
     # row's OWN window (watermark stops 10s short of it) is the single
     # open one — every real-event window is 30 days closed
     assert n_stream == batch.count() - 1 > 0
+
+
+def test_q7_restart_keeps_checkpointed_state_partitions(spark, stream_dir,
+                                                        tmp_path):
+    """Q7 runs over the first two files at 8 state partitions, then
+    restarts from its checkpoint at 2 over the rest. Spark keeps the
+    count it recorded at the first start (the note in session.py), and
+    the files written across the cut equal the batch replay: no window
+    lost or written twice."""
+    d, _ = stream_dir
+    files = sorted(os.listdir(d))
+    src, out, ckpt = (str(tmp_path / n) for n in ("src", "out", "ckpt"))
+    os.mkdir(src)
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def run(names, partitions):
+        for f in names:
+            shutil.copy(os.path.join(d, f), src)
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        return (PCollection(_q7(_source(spark, src)), is_bounded=False)
+                | WriteStreamToFiles(out, checkpoint=ckpt))
+
+    try:
+        queries = [run(files[:2], "8"), run(files[2:], "2")]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    state = [[op.numShufflePartitions
+              for p in q.recentProgress for op in p.stateOperators]
+             for q in queries]
+    assert all(state) and {n for s in state for n in s} == {8}, state
+
+    events = _batch_events(spark, d)
+    cutoff = events.agg(F.max("ts")).first()[0]
+    # append mode holds only the tail row's own window
+    expected = _q7(events).where(F.col("window.end") <= F.lit(cutoff))
+    got = spark.read.parquet(out)
+    assert sorted(got.collect()) == sorted(expected.collect())
+    assert got.count() > 0
 
 
 def test_q11_stream_equals_batch(spark, stream_dir):

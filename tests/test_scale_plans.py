@@ -3,39 +3,47 @@ scaling with maxPartitionBytes, bucketed-join exchange reuse lives in
 test_io. These assert the 100 TB story on small data by reading the
 physical plans Spark actually executes (SCALE.md)."""
 
-from pyspark.sql import SparkSession
+import re
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_INITIAL = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
-def test_aqe_splits_skewed_join_partition():
+
+@contextmanager
+def _scoped_conf(spark, confs: dict):
+    """Set ``confs`` on the shared session and restore them on exit."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_aqe_splits_skewed_join_partition(spark):
     """A 90%-one-key join under AQE ends with SortMergeJoin(skew=true)
     and an `AQEShuffleRead skewed` — the runtime re-plan that replaces
     hand-salting for all but pathological single-key skew (salted_join
     covers that case)."""
-    spark = (SparkSession.builder.master("local[8]")
-             .appName("skew-demo")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "65536")
-             .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-             .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-             .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-             .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-             .config("spark.sql.shuffle.partitions", "8")
-             .getOrCreate())
-    # builder.getOrCreate() on a live session MUTATES it (configs are
-    # applied to the shared session) — snapshot and restore the knobs
-    # this test flips so later plan assertions see default behavior
-    restore = {k: spark.conf.get(k, None) for k in (
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.shuffle.partitions")}
-    try:
+    with _scoped_conf(spark, {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
+                "65536",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "65536",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+            _SHUFFLE: "8"}):
         left = spark.range(400_000).select(
             F.when(F.col("id") % 10 < 9, 0).otherwise(F.col("id")).alias("k"),
             F.concat(F.lit("x" * 64), F.col("id").cast("string")).alias("pad"))
@@ -47,12 +55,51 @@ def test_aqe_splits_skewed_join_partition():
         assert "isFinalPlan=true" in plan
         assert "SortMergeJoin(skew=true)" in plan, plan[:800]
         assert "AQEShuffleRead skewed" in plan
-    finally:
-        for k, v in restore.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+
+
+def test_state_and_batch_partitions_come_from_their_own_settings(
+        spark, tmp_path):
+    """The split ``session.get_spark`` relies on: a stateful stream's
+    state operator runs with AQE off and takes spark.sql.shuffle.partitions,
+    while a batch shuffle on the same session plans at AQE's
+    initialPartitionNum. A Spark upgrade that changes either rule must
+    fail here."""
+    from beam_spark.session import batch_shuffle_partitions
+
+    src = str(tmp_path / "src")
+    spark.range(20).selectExpr("id % 3 AS k", "id").write.parquet(src)
+    with _scoped_conf(spark, {
+            "spark.sql.adaptive.enabled": "true",
+            "spark.sql.adaptive.coalescePartitions.enabled": "true",
+            _SHUFFLE: "3", _INITIAL: "5"}):
+        q = (spark.readStream.schema("k long, id long").parquet(src)
+             .groupBy("k").count()
+             .writeStream.format("memory").queryName("bs_state_parts")
+             .outputMode("complete").trigger(availableNow=True).start())
+        q.awaitTermination()
+        spark.catalog.dropTempView("bs_state_parts")
+        state = [op.numShufflePartitions
+                 for p in q.recentProgress for op in p.stateOperators]
+        assert state and set(state) == {3}, state
+
+        batch = spark.range(20).groupBy((F.col("id") % 3).alias("k")).count()
+        plan = batch._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"hashpartitioning\([^()]*, 5\)", plan), plan
+        assert batch_shuffle_partitions(spark) == 5
+
+
+def test_live_session_settings_survive_bare_pipeline(spark):
+    """``Pipeline()`` and a second ``get_spark()`` use the live session
+    as it is: the engine defaults never overwrite what its owner set."""
+    from beam_spark.pcollection import Pipeline
+    from beam_spark.session import get_spark
+
+    with _scoped_conf(spark, {_SHUFFLE: "7", _INITIAL: "9"}):
+        live = Pipeline().spark
+        get_spark(extra_conf={_SHUFFLE: "32"})
+        assert live.conf.get(_SHUFFLE) == "7"
+        assert live.conf.get(_INITIAL) == "9"
+        assert spark.conf.get(_SHUFFLE) == "7"
 
 
 def test_scan_parallelism_scales_with_max_partition_bytes(spark, tmp_path):
@@ -97,7 +144,6 @@ def test_gate_suite_plans_keep_pushdown_and_broadcast(spark):
 def test_flagship_q1_scan_prunes_columns(spark):
     """q1 projects 7 of lineitem's columns; the parquet ReadSchema must
     be pruned accordingly (not the full row)."""
-    import re
     from beam_spark import gates as g
 
     plan = (g.queries()["q1_pricing_summary"](spark, "/root/testdata/sf0.001")
@@ -249,7 +295,6 @@ def test_exact_substr_hashes_before_shuffle(spark, sf_dir):
     assert "xxhash64" in optimized
     # the gram string (concat_ws) is computed below every Exchange:
     # no Exchange operator's output column list carries a concat_ws
-    import re
     for frag in re.findall(r"Exchange [^\n]*", optimized):
         assert "concat_ws" not in frag
 
