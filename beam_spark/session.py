@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 _SHUFFLE = "spark.sql.shuffle.partitions"
@@ -77,10 +76,12 @@ def get_spark(app_name: str = "beam_spark", master: str | None = None,
     ``getOrCreate`` would re-apply every option to it and overwrite what
     its owner set, so ``app_name``, ``master`` and ``extra_conf`` only
     shape a new session."""
-    try:
-        return SparkSession.active()
-    except PySparkRuntimeError:
-        pass
+    # The session the builder's getOrCreate would return, not the
+    # calling thread's active one (a foreachBatch body's, or one made
+    # by newSession()).
+    live = SparkSession._instantiatedSession
+    if live is not None and live._sc._jsc is not None:
+        return live
     conf = {**_ENGINE_CONFS, **(extra_conf or {})}
     conf.setdefault(_INITIAL, conf.get(_SHUFFLE, _BATCH_PARTITIONS))
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
